@@ -1,0 +1,1 @@
+"""ETL benchmark: workloads, tracing and output checks (see README.md)."""

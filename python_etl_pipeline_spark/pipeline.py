@@ -9,9 +9,10 @@ Fail-fast per phase like the reference's run_full_pipeline
 
 Scale design: no driver-side row loops anywhere — the only driver
 values are per-phase row counts (one scalar action per table); merges
-are keyed shuffles; the production sink partitions the fact table by
-date for partition pruning (the analog of the reference's secondary
-indexes, K6).
+are keyed shuffles. A scheduled window transforms and loads only the
+entities that received new files (every entity after a crashed run),
+and each production append writes its anti-join delta unpartitioned:
+a few files per entity per window, whatever years the rows span.
 """
 
 from __future__ import annotations
@@ -261,7 +262,10 @@ class Pipeline:
         # path -> raw record count for the batch in flight (filled by
         # _extract_entity Observations, consumed by the log append)
         self._file_record_counts: dict[str, int] = {}
-        self._n_new_files: int | None = None
+        # files the batch in flight appended to the ingest log, and the
+        # entities they belong to (run_full's skip signals)
+        self._n_new_files = 0
+        self._changed_entities: set[str] = set()
         # entity -> PK buckets touched by the batch in flight (filled by
         # _extract_entity, consumed by _transform_entity to re-transform
         # only the staging partitions this batch changed). None = no
@@ -300,7 +304,6 @@ class Pipeline:
             self.ingest_log.new_files_df(all_paths).collect() if all_paths else []
         )
         new_set = {r["path"] for r in new_rows}
-        self._n_new_files = len(new_set)  # run_full's hash-skip signal
         hashes = {r["path"]: r["file_hash"] for r in new_rows}
 
         self._file_record_counts: dict[str, int] = {}
@@ -308,6 +311,8 @@ class Pipeline:
             (entity, [p for p in paths if p in new_set])
             for entity, paths in files_per_entity.items()
         ]
+        self._n_new_files = len(new_set)
+        self._changed_entities = {entity for entity, paths in items if paths}
         with ThreadPoolExecutor(max_workers=min(8, max(1, len(items)))) as ex:
             list(ex.map(lambda kv: self._extract_entity(*kv), items))
         self.ingest_log.mark_processed_batch(
@@ -319,6 +324,9 @@ class Pipeline:
         pk = PRIMARY_KEYS[entity]
         if not new_paths:
             self.metrics.extracted[entity] = 0
+            # no bucket knowledge from this batch: a later transform of
+            # this entity must not reuse an earlier batch's buckets
+            self._touched_buckets[entity] = None
             return
         raw = read_csv_all_string(self.spark, new_paths, STAGING_COLUMNS[entity])
         # Per-file raw record counts, observed at the point in the plan
@@ -450,10 +458,13 @@ class Pipeline:
     # -- transform: staging -> typed/enriched layer ---------------------------
     def run_transform(self, entities: list[str] | None = None) -> None:
         """Per-entity transforms write distinct directories — independent
-        jobs, run concurrently (load stays serial: FK order matters)."""
+        jobs, run concurrently (load stays serial: FK order matters).
+        ``None`` transforms every entity, ``[]`` none."""
         from concurrent.futures import ThreadPoolExecutor
 
-        ents = entities or LOAD_ORDER
+        ents = LOAD_ORDER if entities is None else entities
+        if not ents:
+            return
         with ThreadPoolExecutor(max_workers=min(8, len(ents))) as ex:
             list(ex.map(self._transform_entity, ents))
 
@@ -512,7 +523,17 @@ class Pipeline:
 
     # -- load: incremental append into production ----------------------------
     def run_load(self, entities: list[str] | None = None) -> None:
-        for entity in entities or LOAD_ORDER:  # FK-safe order (load.py:305)
+        """Append each entity's new PKs to production, in FK-safe order
+        (load.py:305). ``None`` loads every entity, ``[]`` none.
+
+        Production is one unpartitioned layout for every entity: an
+        append writes the anti-join delta as it comes out of the join —
+        no shuffle and a few files per window. Partitioning the fact
+        table by year made each ~530-row daily append write one file
+        into each of ~66 year directories, and every later read of
+        production paid a listing job over them; no reader prunes on
+        the year."""
+        for entity in LOAD_ORDER if entities is None else entities:
             pk = PRIMARY_KEYS[entity]
             if not self.wh.exists("transformed", entity):
                 continue  # entity had no input this run; read errors propagate
@@ -522,38 +543,41 @@ class Pipeline:
             incremental = self.wh.exists("production", entity)
             if incremental:
                 target = self.wh.read("production", entity)
+                stale = sorted(set(target.columns) - set(src.columns))
+                if stale:
+                    # e.g. transaction_year from the year-partitioned
+                    # layout: an unpartitioned append into partition
+                    # directories is silently skipped by later reads
+                    raise ValueError(
+                        f"production.{entity} has columns the transformed "
+                        f"table lacks: {stale}; rebuild production from "
+                        "the CSVs with this version"
+                    )
                 # materialize the delta before appending into the scanned dir
                 delta = incremental_append_antijoin(src, target, pk).localCheckpoint(eager=True)
-            else:
-                delta = src
-            # partition the fact table by YEAR: coarse enough to avoid a
-            # tiny-file explosion (day-granularity created ~23k dirs for
-            # 107k rows and dominated wall time), fine enough for pruning;
-            # repartition on the key first so each partition writes 1 file.
-            part = ["transaction_year"] if entity == "transactions" else None
-            if part:
-                delta = delta.withColumn(
-                    "transaction_year", F.year("transaction_date")
-                ).repartition("transaction_year")
-            if not incremental:
-                # first load: delta IS src, and production after the append
-                # holds exactly these rows — one Observation folded into the
-                # write yields loaded, source, and target counts with no
-                # extra job. (The incremental branch keeps explicit counts:
-                # an observe node on src/target would sit inside the
-                # anti-join and block column pruning of the key-only side.)
-                from pyspark.sql import Observation
-
-                obs = Observation()
-                delta = delta.observe(obs, F.count(F.lit(1)).alias("n"))
-                self.wh.append(delta, "production", entity, partition_by=part)
-                prod_count = src_count = int(obs.get["n"])
-            else:
-                self.wh.append(delta, "production", entity, partition_by=part)
+                self.wh.append(delta, "production", entity)
                 # one read-back count serves both the loaded metric and the
                 # reconciliation target side (was two scans of production)
                 prod_count = self.wh.read("production", entity).count()
-                src_count = src.count()
+                # the source side is the transformed table, which this
+                # run's transform phase counted after writing it
+                src_count = self.metrics.transformed.get(entity)
+                if src_count is None:  # standalone load
+                    src_count = src.count()
+            else:
+                # first load: production after the append holds exactly
+                # src — one Observation folded into the write yields
+                # loaded, source, and target counts with no extra job.
+                # (An observe node on src/target in the incremental branch
+                # would sit inside the anti-join and block column pruning
+                # of the key-only side.)
+                from pyspark.sql import Observation
+
+                obs = Observation()
+                self.wh.append(
+                    src.observe(obs, F.count(F.lit(1)).alias("n")), "production", entity
+                )
+                prod_count = src_count = int(obs.get["n"])
             self.metrics.loaded[entity] = prod_count
             self.metrics.reconciliation[entity] = {
                 "source_count": src_count,
@@ -572,33 +596,29 @@ class Pipeline:
         path = sc._jvm.org.apache.hadoop.fs.Path(f"{self.wh.root}/_run_marker")
         return path.getFileSystem(sc._jsc.hadoopConfiguration()), path
 
-    def _write_success_marker(self) -> None:
-        """Record that a run COMPLETED (extract through load) at the
-        current ingest-log size. Driver-side metadata IO via the Hadoop
-        FS API (scheme-agnostic, object-store-safe) — NOT a Spark
-        write: a 1-row ``createDataFrame(...).write.parquet`` was
+    def _write_success_marker(self, n_files: int) -> None:
+        """Record that a run COMPLETED (extract through load) with
+        ``n_files`` files in the ingest log. Driver-side metadata IO via
+        the Hadoop FS API (scheme-agnostic, object-store-safe) — NOT a
+        Spark write: a 1-row ``createDataFrame(...).write.parquet`` was
         measured at 3.6 s per run (it drags a Python-worker exchange
         into the job), which doubled the 107k-row pipeline's wall. The
-        FS write is ~ms; only the ingest-log summary (one tiny agg
-        job) remains."""
-        n = int(self.ingest_log.summary().first()["n_files"] or 0)
+        FS write is ~ms."""
         fs, path = self._marker_fs_path()
         out = fs.create(path, True)
         try:
-            out.write(str(n).encode("ascii"))
+            out.write(str(n_files).encode("ascii"))
         finally:
             out.close()
 
-    def _marker_current(self) -> bool:
-        """True iff the last COMPLETED run saw exactly today's ingest
-        log — i.e. nothing was ingested since, and no run crashed
-        between extract and load (a crash leaves the marker behind the
-        log, or absent)."""
+    def _read_marker(self) -> int | None:
+        """The ingest-log size the last COMPLETED run saw; None when no
+        run has completed or the marker is unreadable."""
         sc = self.spark.sparkContext
         try:
             fs, path = self._marker_fs_path()
             if not fs.exists(path):
-                return False
+                return None
             stream = fs.open(path)
             try:
                 text = sc._jvm.org.apache.commons.io.IOUtils.toString(
@@ -606,41 +626,50 @@ class Pipeline:
                 )
             finally:
                 stream.close()
-            marker_n = int(text.strip())
+            return int(text.strip())
         except Exception:
-            return False  # unreadable/garbled marker -> run everything
-        s = self.ingest_log.summary().first()
-        return marker_n == int(s["n_files"] or 0)
+            return None  # unreadable/garbled marker -> run everything
 
     def run_full(self, files_per_entity: dict[str, list[str]]) -> dict:
         """Fail-fast phase runner with per-phase timing logs (M1/M3:
-        main.py:279-308, src/logger.py).
+        main.py:279-308, src/logger.py). The metrics describe this run
+        only.
 
-        No-new-files short-circuit (the reference's hash-skip,
-        extract.py:494-496 — a scheduled window where every file is
-        already in the tracker logs 'skipped' and ends): when extract
-        ingests ZERO new files AND the success marker shows the last
-        run completed at the current ingest-log state, transform and
-        load are skipped — they would recompute byte-identical tables
-        from unchanged staging. Recovery-safe: the marker is written
-        only after a successful load, so a run that crashed between
-        extract and load leaves marker != log and the next invocation
-        runs every phase. Measured at 10x volume (1.07M rows): the
-        skip path is ~1 s vs ~8.8 s for the full recompute
-        (SCALE.md)."""
+        Per-entity skip (the reference's hash-skip, extract.py:494-496,
+        applied to each entity): after extract, one ingest-log summary
+        tells whether the last run completed — the success marker equals
+        the log's file count minus the files this window appended. If
+        it did, transform and load run only for the entities that
+        received new files; the others would recompute byte-identical
+        tables from unchanged staging. A window with no new file then
+        skips both phases ('no_new_files'). If the last run did not
+        complete (a crash between extract and load leaves the marker
+        behind the log, or absent), every entity is re-transformed in
+        full and re-loaded, so the crashed run's staged rows reach
+        production. The summary names the skipped entities."""
         import logging
         import time
 
         log = logging.getLogger("spark_etl_engine.pipeline")
+        self.metrics = PipelineMetrics()
         timings: dict[str, float] = {}
         t0 = time.time()
         self.run_extract(files_per_entity)
         timings["extract"] = round(time.time() - t0, 3)
         log.info("phase extract done in %.1fs", timings["extract"])
-        if self._n_new_files == 0 and self._marker_current():
-            summary = self.metrics.summary()
-            summary["phase_seconds"] = timings
-            summary["no_new_files"] = True
+        n_logged = int(self.ingest_log.summary().first()["n_files"] or 0)
+        if self._read_marker() == n_logged - self._n_new_files:
+            entities = [e for e in LOAD_ORDER if e in self._changed_entities]
+        else:
+            log.info("previous run did not complete — every entity runs")
+            entities = None
+            # the crashed run may have staged buckets this batch did not
+            # touch: re-derive every entity from all of staging
+            self._touched_buckets.clear()
+        skipped = [] if entities is None else [e for e in LOAD_ORDER if e not in entities]
+        if entities == []:
+            summary = {**self.metrics.summary(), "phase_seconds": timings,
+                       "no_new_files": True, "skipped_entities": skipped}
             log.info(
                 "no new files and previous run completed — transform/load "
                 "skipped (hash-skip): %s", summary,
@@ -648,13 +677,12 @@ class Pipeline:
             return summary
         for phase, fn in [("transform", self.run_transform), ("load", self.run_load)]:
             t0 = time.time()
-            fn()
+            fn(entities)
             timings[phase] = round(time.time() - t0, 3)
             log.info("phase %s done in %.1fs", phase, timings[phase])
-        self._write_success_marker()
-        summary = self.metrics.summary()
-        summary["phase_seconds"] = timings
-        summary["no_new_files"] = False
+        self._write_success_marker(n_logged)
+        summary = {**self.metrics.summary(), "phase_seconds": timings,
+                   "no_new_files": False, "skipped_entities": skipped}
         for line in self.metrics.format_report(timings):
             log.info("%s", line)
         log.info("pipeline %s: %s", summary["status"], summary)

@@ -29,12 +29,6 @@ def incremental_append_watermark(
     return incoming.filter(F.col(seq_col) > wm)
 
 
-def high_watermark(target: DataFrame, seq_col: str):
-    """A2: current max watermark of the target (None when empty)."""
-    row = target.agg(F.max(seq_col).alias("wm")).first()
-    return row["wm"]
-
-
 def incremental_append_antijoin(
     incoming: DataFrame, target: DataFrame, pk: str
 ) -> DataFrame:

@@ -118,8 +118,3 @@ TESTDATA_TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
-
-
-def load_table(spark, sf_dir: str, name: str):
-    """Read one testdata parquet table."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")

@@ -2,9 +2,9 @@
 
 staging -> transformed -> production directories, replacing the
 reference's three databases (MySQL stagging/transformed + PostgreSQL
-bank_production). Writers are layout-aware: the production fact sink
-partitions by date (replacing the reference's secondary indexes,
-K6 src/load.py:107-122 — partition pruning is the scalable analog).
+bank_production). Writers are layout-aware: callers choose the
+partition columns per write (staging and transformed are PK-range
+bucketed; production is appended unpartitioned).
 """
 
 from __future__ import annotations
@@ -84,17 +84,15 @@ class Warehouse:
         incremental-refresh sink (reload one day/source without
         rewriting the table). Static overwrite mode would truncate the
         whole table first; at 100 TB that turns a one-partition backfill
-        into a full rewrite. Scoped config flip, restored afterward, so
-        the session default stays static for plain ``overwrite``."""
-        key = "spark.sql.sources.partitionOverwriteMode"
-        prev = self.spark.conf.get(key, "STATIC")
-        self.spark.conf.set(key, "dynamic")
-        try:
-            (df.write.mode("overwrite")
-             .partitionBy(*partition_by)
-             .parquet(self.path(layer, table)))
-        finally:
-            self.spark.conf.set(key, prev)
+        into a full rewrite. The mode is a per-write option, never a
+        session conf flip: the pipeline's extract and transform thread
+        pools write concurrently, and a racing set/restore of the
+        session-global mode could run another thread's overwrite STATIC
+        and truncate its table to the batch's partitions."""
+        (df.write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy(*partition_by)
+         .parquet(self.path(layer, table)))
 
     def export_csv(self, df: DataFrame, out_dir: str) -> None:
         """K4: CSV export with NULL -> 'NA' (src/transform.py:493-515)."""
@@ -122,10 +120,9 @@ class Warehouse:
         collide into one shard; dedupe first if exact balance
         matters). Returns a manifest {shard_value: row_count} — the
         sidecar a dataloader uses for length-aware scheduling. At
-        100 TB this is the same partitioned-write economics as the
-        year-partitioned fact sink: shard count must track data
-        volume, and the per-shard repartition guarantees no tiny-file
-        explosion."""
+        100 TB this is the usual partitioned-write economics: shard
+        count must track data volume, and the per-shard repartition
+        guarantees no tiny-file explosion."""
         from pyspark.sql import functions as F
 
         if shard_col is None:

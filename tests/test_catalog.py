@@ -250,6 +250,49 @@ def test_overwrite_partitions_touches_only_present_partitions(spark, tmp_path):
     assert spark.conf.get("spark.sql.sources.partitionOverwriteMode").upper() == "STATIC"
 
 
+def test_overwrite_partitions_never_flips_session_mode(spark, tmp_path, monkeypatch):
+    """The pipeline's extract and transform thread pools call
+    overwrite_partitions concurrently, so the dynamic mode must be a
+    per-write option: the session-global mode stays STATIC before,
+    during and after the write (a racing set/restore could otherwise
+    run another thread's overwrite STATIC and truncate its table), and
+    only the partitions present in the frame are replaced."""
+    from python_etl_pipeline_spark.sources.warehouse import Warehouse
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    wh = Warehouse(spark, str(tmp_path))
+    wh.overwrite(
+        spark.createDataFrame([(0, "a"), (1, "b"), (2, "c")], "b long, v string"),
+        "staging", "t", partition_by=["b"],
+    )
+    fix = spark.createDataFrame([(1, "B"), (1, "B2")], "b long, v string")
+
+    conf_sets: list[str] = []
+    seen_during: list[str] = []
+    conf_cls, writer_cls = type(spark.conf), type(fix.write)
+    orig_set, orig_parquet = conf_cls.set, writer_cls.parquet
+
+    def spy_set(self, k, v):
+        conf_sets.append(k)
+        return orig_set(self, k, v)
+
+    def spy_parquet(self, *a, **k):
+        seen_during.append(spark.conf.get(key).upper())
+        return orig_parquet(self, *a, **k)
+
+    assert spark.conf.get(key).upper() == "STATIC"
+    monkeypatch.setattr(conf_cls, "set", spy_set)
+    monkeypatch.setattr(writer_cls, "parquet", spy_parquet)
+    wh.overwrite_partitions(fix, "staging", "t", ["b"])
+    monkeypatch.undo()
+
+    assert key not in conf_sets
+    assert seen_during == ["STATIC"]
+    assert spark.conf.get(key).upper() == "STATIC"
+    after = sorted(tuple(r) for r in wh.read("staging", "t").select("b", "v").collect())
+    assert after == [(0, "a"), (1, "B"), (1, "B2"), (2, "c")]
+
+
 def test_schema_evolution_read(spark, tmp_path):
     from python_etl_pipeline_spark.sources.warehouse import read_evolved
 

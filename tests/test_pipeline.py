@@ -255,3 +255,187 @@ def test_corrupt_staging_fails_loudly(spark, tmp_path):
     pipe = Pipeline(spark, str(tmp_path / "wh"))
     with pytest.raises(Exception):
         pipe._transform_entity("customers")
+
+
+# ---------------------------------------------------------------------------
+# Per-entity skip and the production layout
+# ---------------------------------------------------------------------------
+
+def _layer_files(pipe, layer, entity):
+    """relative path -> (size, mtime_ns, md5) of every parquet file."""
+    import hashlib
+    import os
+
+    root = pipe.wh.path(layer, entity)
+    out = {}
+    for dirpath, _dirs, names in os.walk(root):
+        for n in names:
+            if n.endswith(".parquet"):
+                p = os.path.join(dirpath, n)
+                st = os.stat(p)
+                with open(p, "rb") as f:
+                    digest = hashlib.md5(f.read()).hexdigest()
+                out[os.path.relpath(p, root)] = (st.st_size, st.st_mtime_ns, digest)
+    return out
+
+
+def _deliver(files, entity, path, content):
+    path.write_text(content)
+    out = {e: list(ps) for e, ps in files.items()}
+    out[entity] = out.get(entity, []) + [str(path)]
+    return out
+
+
+def _prod_ids(pipe, entity):
+    from python_etl_pipeline_spark.schemas import PRIMARY_KEYS
+
+    ids = [r[0] for r in pipe.wh.read("production", entity).select(PRIMARY_KEYS[entity]).collect()]
+    assert len(ids) == len(set(ids)), f"duplicate PKs in production.{entity}"
+    return set(ids)
+
+
+def test_window_transforms_and_loads_only_entities_with_new_files(spark, tmp_path):
+    """A window that delivers only a customers file transforms and loads
+    only customers: the other entities' transformed and production files
+    stay byte-for-byte on disk, and production counts stay exact."""
+    (tmp_path / "in").mkdir()
+    files = _write_files(tmp_path / "in")
+    pipe = Pipeline(spark, str(tmp_path / "wh"))
+    pipe.run_full(files)
+    others = ("branches", "loans", "transactions")
+    before = {(lay, e): _layer_files(pipe, lay, e)
+              for lay in ("transformed", "production") for e in others}
+
+    files = _deliver(files, "customers", tmp_path / "in" / "customers_2.csv", CUST_HEADER
+                     + "4,QT0002,new,person,1990-05-05,F,p@x.com,123,addr,2023-03-03\n"
+                     + "2,QT0002,vik,changed,1945-01-01,male,v@x.com,1,addr,2019-06-01\n")
+    s = pipe.run_full(files)
+
+    assert s["no_new_files"] is False
+    assert s["skipped_entities"] == list(others)
+    assert set(pipe.metrics.transformed) == set(pipe.metrics.loaded) == {"customers"}
+    assert pipe.metrics.reconciliation["customers"]["synced"]
+    for (lay, e), snap in before.items():
+        assert _layer_files(pipe, lay, e) == snap, f"{lay}.{e} was rewritten"
+    assert _prod_ids(pipe, "customers") == {"1", "2", "3", "4"}
+    assert _prod_ids(pipe, "branches") == {"QT0001", "QT0002", "QT0003"}
+    assert _prod_ids(pipe, "loans") == {"10", "11", "12"}
+    assert _prod_ids(pipe, "transactions") == {"100", "101"}
+    staged = {r["customer_id"]: r["last_name"] for r in pipe.wh.read("staging", "customers").collect()}
+    assert staged["2"] == "changed"
+
+
+def test_crashed_run_heals_every_entity(spark, tmp_path, monkeypatch):
+    """A crash after extract leaves the success marker behind the ingest
+    log. The next window then runs every entity, re-transforming each
+    from all of staging, so the crashed run's staged rows reach
+    production even when they sit in a PK bucket this window does not
+    touch (bucket width 1e6: id 2000001 is bucket 2, ids 4 and 6 are
+    bucket 0)."""
+    import pytest
+
+    (tmp_path / "in").mkdir()
+    files = _write_files(tmp_path / "in")
+    pipe = Pipeline(spark, str(tmp_path / "wh"))
+    pipe.run_full(files)
+    # a normal window upgrades customers to the bucketed layout
+    files = _deliver(files, "customers", tmp_path / "in" / "customers_2.csv", CUST_HEADER
+                     + "4,QT0002,four,x,1990-05-05,F,a@x.com,1,addr,2023-03-03\n")
+    pipe.run_full(files)
+
+    def crash(*_a, **_k):
+        raise RuntimeError("simulated crash after extract")
+
+    files = _deliver(files, "customers", tmp_path / "in" / "customers_3.csv", CUST_HEADER
+                     + "2000001,QT0002,crashed,x,1990-05-05,F,b@x.com,1,addr,2023-03-03\n")
+    monkeypatch.setattr(pipe, "run_transform", crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        pipe.run_full(files)
+    monkeypatch.undo()
+    assert "2000001" not in _prod_ids(pipe, "customers")
+
+    branches_before = _layer_files(pipe, "transformed", "branches")
+    files = _deliver(files, "customers", tmp_path / "in" / "customers_4.csv", CUST_HEADER
+                     + "6,QT0002,six,x,1990-05-05,F,c@x.com,1,addr,2023-03-03\n")
+    s = pipe.run_full(files)
+    assert s["skipped_entities"] == []
+    assert set(pipe.metrics.loaded) == {"branches", "customers", "loans", "transactions"}
+    assert _layer_files(pipe, "transformed", "branches") != branches_before
+    assert _prod_ids(pipe, "customers") == {"1", "2", "3", "4", "2000001", "6"}
+    # healed: the marker is current again, so a re-run skips everything
+    assert pipe.run_full(files)["no_new_files"] is True
+
+
+def test_reused_pipeline_does_not_retransform_entity_without_new_files(spark, tmp_path):
+    """On one Pipeline object, an entity that had new files in one window
+    and none in the next is not re-transformed in the second (its
+    touched buckets from the first window are not reused)."""
+    (tmp_path / "in").mkdir()
+    files = _write_files(tmp_path / "in")
+    pipe = Pipeline(spark, str(tmp_path / "wh"))
+    pipe.run_full(files)
+    files = _deliver(files, "customers", tmp_path / "in" / "customers_2.csv", CUST_HEADER
+                     + "4,QT0002,four,x,1990-05-05,F,a@x.com,1,addr,2023-03-03\n")
+    pipe.run_full(files)
+    cust_before = _layer_files(pipe, "transformed", "customers")
+
+    files = _deliver(files, "loans", tmp_path / "in" / "loans_2.csv",
+                     LOANS.splitlines()[0] + "\n13,4,car,1000,9,01-03-22,01-03-24,Active\n")
+    s = pipe.run_full(files)
+    assert "customers" in s["skipped_entities"]
+    assert pipe._touched_buckets["customers"] is None
+    assert set(pipe.metrics.transformed) == {"loans"}
+    assert _layer_files(pipe, "transformed", "customers") == cust_before
+    assert _prod_ids(pipe, "loans") == {"10", "11", "12", "13"}
+
+
+def test_production_append_is_unpartitioned(spark, tmp_path):
+    """Production holds one layout for every entity: no per-year
+    directories, at most one file per shuffle partition per window, and
+    the transformed schema minus the staging bucket column."""
+    import os
+
+    header = TRANSACTIONS.splitlines()[0] + "\n"
+    (tmp_path / "in").mkdir()
+    files = _write_files(tmp_path / "in")
+    files = _deliver(files, "transactions", tmp_path / "in" / "transactions_2.csv", header
+                     + "102,1,1961-02-03,deposit,10,10,no\n"
+                     + "103,2,1999-12-31,withdrawal,20,30,no\n")
+    pipe = Pipeline(spark, str(tmp_path / "wh"))
+    pipe.run_full(files)
+    first = _layer_files(pipe, "production", "transactions")
+
+    files = _deliver(files, "transactions", tmp_path / "in" / "transactions_3.csv", header
+                     + "104,1,1965-01-01,deposit,1,1,no\n"
+                     + "105,1,1987-06-30,deposit,2,2,no\n"
+                     + "106,2,2010-10-10,deposit,3,3,yes\n")
+    pipe.run_full(files)
+    after = _layer_files(pipe, "production", "transactions")
+
+    root = pipe.wh.path("production", "transactions")
+    assert not any(d.startswith("transaction_year=") for d in os.listdir(root))
+    added = set(after) - set(first)
+    assert 1 <= len(added) <= int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert _prod_ids(pipe, "transactions") == {str(i) for i in range(100, 107)}
+    tf = pipe.wh.read("transformed", "transactions").drop("__pk_bucket")
+    prod = pipe.wh.read("production", "transactions")
+    assert [(f.name, f.dataType) for f in prod.schema] == [(f.name, f.dataType) for f in tf.schema]
+
+
+def test_load_refuses_year_partitioned_production(spark, tmp_path):
+    """A production table written with the older year-partitioned layout
+    must fail the load loudly: an unpartitioned append into partition
+    directories is silently dropped by later reads."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    (tmp_path / "in").mkdir()
+    files = _write_files(tmp_path / "in")
+    pipe = Pipeline(spark, str(tmp_path / "wh"))
+    pipe.run_extract(files)
+    pipe.run_transform(["transactions"])
+    old = pipe.wh.read("transformed", "transactions").drop("__pk_bucket")
+    pipe.wh.append(old.withColumn("transaction_year", F.year("transaction_date")),
+                   "production", "transactions", partition_by=["transaction_year"])
+    with pytest.raises(ValueError, match="transaction_year"):
+        pipe.run_load(["transactions"])

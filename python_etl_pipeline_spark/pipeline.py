@@ -10,9 +10,14 @@ Fail-fast per phase like the reference's run_full_pipeline
 Scale design: no driver-side row loops anywhere — the only driver
 values are per-phase row counts (one scalar action per table); merges
 are keyed shuffles. A scheduled window transforms and loads only the
-entities that received new files (every entity after a crashed run),
-and each production append writes its anti-join delta unpartitioned:
-a few files per entity per window, whatever years the rows span.
+entities that received new files (every entity after a crashed run).
+
+One layout per layer, from the first write on: staging and transformed
+are partitioned by PK-range bucket, and each is written by one
+partition overwrite, so a batch rewrites only the buckets its keys fall
+in; production takes each window's anti-join delta as an unpartitioned
+append, a few files per entity per window. A staging or transformed
+table in any other layout fails the run (``Pipeline._bucketed``).
 """
 
 from __future__ import annotations
@@ -51,17 +56,10 @@ from .sources import IngestLog, Warehouse, read_csv_all_string
 # ---------------------------------------------------------------------------
 # Per-entity transform chains (src/transform.py:229-491, vectorized)
 # ---------------------------------------------------------------------------
-
-def _passthrough(df: DataFrame) -> list:
-    """Layout passthrough for the per-entity transforms: staging's
-    __pk_bucket partition column (r16 incremental re-transform) must
-    ride through the row-wise select UNCHANGED — recomputing it from
-    the cleaned PK could re-bucket a row, and overwrite_partitions
-    would then replace its new bucket without the untouched rows that
-    live there. Empty for non-bucketed inputs, so direct callers see
-    the original schema."""
-    return [F.col("__pk_bucket")] if "__pk_bucket" in df.columns else []
-
+# Each chain carries staging's PK-bucket column through unchanged:
+# recomputing it from the cleaned PK could move a row to another bucket,
+# and the transformed layer's partition overwrite would then replace
+# that bucket without the rows already in it.
 
 def transform_branches(df: DataFrame) -> DataFrame:
     state = safe_val(F.col("state"), upper=True)
@@ -72,7 +70,7 @@ def transform_branches(df: DataFrame) -> DataFrame:
         state.alias("state"),
         safe_val(F.col("manager_name"), title=True).alias("manager_name"),
         region_map(state).alias("region"),
-        *_passthrough(df),
+        F.col(_bucket_col()),
     )
 
 
@@ -94,7 +92,7 @@ def transform_customers(df: DataFrame) -> DataFrame:
         aod.alias("account_open_date"),
         tenure.alias("customer_tenure_days"),
         customer_segment(tenure).alias("customer_segment"),
-        *_passthrough(df),
+        F.col(_bucket_col()),
     )
 
 
@@ -114,7 +112,7 @@ def transform_loans(df: DataFrame) -> DataFrame:
         safe_val(F.col("loan_status"), title=True).alias("loan_status"),
         duration_months(start, end).alias("loan_duration_months"),
         risk_category(amount).alias("risk_category"),
-        *_passthrough(df),
+        F.col(_bucket_col()),
     )
 
 
@@ -129,7 +127,7 @@ def transform_transactions(df: DataFrame) -> DataFrame:
         safe_num(F.col("balance_after")).alias("balance_after"),
         fraud_flag(F.col("fraud_flag")).alias("fraud_flag"),
         transaction_category(amount).alias("transaction_category"),
-        *_passthrough(df),
+        F.col(_bucket_col()),
     )
 
 
@@ -226,20 +224,20 @@ class PipelineMetrics:
 # Phases
 # ---------------------------------------------------------------------------
 
-# Staging/transformed PK-range bucket width (r16, guide §6 / r15 verdict
-# #3): the incremental regime's cost was O(accumulated snapshot) PER
-# BATCH — the staging upsert re-read and re-wrote the whole snapshot and
-# the transform re-derived all of it (measured: per-batch wall grew
-# 5.8 -> 11.6 s over six 107k-row batches, extract +0.15 s/batch,
-# transform +0.4 s/batch — a quadratic total in ingested volume).
-# Bucketing both layers by a coarse PK RANGE localizes monotone-id
-# arrivals (the normal ingest regime: new entities get new ids) to a
-# handful of partitions, so the merge and re-transform touch O(batch)
-# bytes via Warehouse.overwrite_partitions while untouched partitions
-# stay on disk byte-for-byte. Non-numeric and dirty PKs land in bucket
-# -1 (deterministic); a uniformly-scattered update batch degrades to
-# touching every bucket — the old full-rewrite cost, never worse.
+# Staging and transformed are partitioned by a coarse PK range, from the
+# first write on: an incremental batch merges and re-transforms only the
+# buckets its keys fall in (Warehouse.overwrite_partitions), and every
+# other bucket stays on disk byte-for-byte. Monotone-id arrivals, the
+# normal ingest regime, touch a handful of buckets; non-numeric and
+# dirty PKs land in bucket -1; an update batch scattered over every
+# bucket costs one full rewrite. The partition column's name carries
+# the width, so a table bucketed under another width fails the layout
+# guard instead of taking rows bucketed two ways.
 _PK_BUCKET_WIDTH = 1_000_000
+
+
+def _bucket_col() -> str:
+    return f"__pk_bucket_{_PK_BUCKET_WIDTH}"
 
 
 def _pk_bucket(pk: str):
@@ -370,83 +368,46 @@ class Pipeline:
             F.coalesce(seq_map[F.input_file_name()], F.lit(-1)).cast("long"),
         ).withColumn("_ingest_sub", F.monotonically_increasing_id())
         df = dedup_keep_last(df, pk, ["_ingest_seq", "_ingest_sub"]).drop("_ingest_sub")
-        # PK-range bucket partitioning (r16): touched-bucket discovery
-        # is metadata-sized output (bounded by key-range/width, a
-        # handful for monotone-id arrivals) but requires an action over
-        # the batch — so it runs ONLY on incremental runs, off a pinned
-        # batch frame that the merge then reuses (one materialization
-        # serves both; the first-load path pays no extra action at all:
-        # an early version collected buckets unconditionally off the
-        # lazy lineage and re-ran the whole CSV-parse/dedup chain,
-        # measured +15 s of extract at the 100x one-shot).
+        # Touched-bucket discovery needs an action over the batch, so it
+        # runs only when there is a snapshot to merge into, off a pinned
+        # batch frame that the merge then reuses; a first load pays no
+        # extra job.
+        bucket = _bucket_col()
         touched: list[int] | None = None
-        partitioned_staging = True
-        if self.wh.exists("staging", entity):
+        existing = self._bucketed("staging", entity)
+        if existing is not None:
             df = df.localCheckpoint(eager=True)
-            existing = self.wh.read("staging", entity)
-            partitioned_staging = "__pk_bucket" in existing.columns
-            if partitioned_staging:
-                touched = [
-                    r["b"]
-                    for r in df.select(
-                        _pk_bucket(pk).alias("b")
-                    ).distinct().collect()
-                ]
-                # merge touches ONLY the batch's buckets: partition
-                # pruning keeps untouched snapshot bytes off this plan
-                existing = existing.filter(
-                    F.col("__pk_bucket").isin(touched)
-                ).drop("__pk_bucket")
-            existing = existing.withColumn(
-                "_ingest_seq", F.lit(-1).cast("long")
-            )
+            touched = [
+                r["b"]
+                for r in df.select(_pk_bucket(pk).alias("b")).distinct().collect()
+            ]
+            # the merge reads ONLY the batch's buckets: partition pruning
+            # keeps untouched snapshot bytes off this plan
+            existing = existing.filter(F.col(bucket).isin(touched)).drop(
+                bucket
+            ).withColumn("_ingest_seq", F.lit(-1).cast("long"))
             # break lineage before overwriting the directory being read
-            merged = upsert_last_writer_wins(
+            df = upsert_last_writer_wins(
                 existing, df, pk, "_ingest_seq"
             ).localCheckpoint(eager=True)
-        else:
-            merged = df
-        out = merged.drop("_ingest_seq")
         # fold the row-count metric into the write job (Observation):
         # the count is computed by the tasks that write, not a second job
-        from pyspark.sql import Observation
-
         obs = Observation()
-        out = out.observe(obs, F.count(F.lit(1)).alias("n"))
-        staging_exists = self.wh.exists("staging", entity)
-        if staging_exists and partitioned_staging:
-            # replace only the touched partitions; the rest of the
-            # snapshot is not read, shuffled, or rewritten
-            out = out.withColumn("__pk_bucket", _pk_bucket(pk))
-            self.wh.overwrite_partitions(
-                out, "staging", entity, ["__pk_bucket"]
-            )
+        out = df.drop("_ingest_seq").observe(obs, F.count(F.lit(1)).alias("n"))
+        # replace only the batch's partitions; the rest of the snapshot
+        # is not read, shuffled, or rewritten
+        self.wh.overwrite_partitions(
+            out.withColumn(bucket, _pk_bucket(pk)), "staging", entity, [bucket]
+        )
+        if touched is None:
+            self.metrics.extracted[entity] = obs.get["n"]
+        else:
             obs.get  # force the Observation so the write job has run
-            # extracted = the full snapshot row count, as before (the
-            # merge only saw the touched buckets, so its Observation
-            # under-counts): one count over the final table — parquet
-            # footer metadata only, no data scan.
+            # extracted = the full snapshot row count (the merge saw only
+            # the touched buckets): parquet footer metadata, no data scan
             self.metrics.extracted[entity] = self.wh.read(
                 "staging", entity
             ).count()
-        elif staging_exists:
-            # legacy unpartitioned staging: one full-merge rewrite
-            # upgrades it to the bucketed layout
-            out = out.withColumn("__pk_bucket", _pk_bucket(pk))
-            self.wh.overwrite(
-                out, "staging", entity, partition_by=["__pk_bucket"]
-            )
-            self.metrics.extracted[entity] = obs.get["n"]
-        else:
-            # FIRST LOAD: the pre-r16 unpartitioned write, byte-for-
-            # byte — a fresh-warehouse one-shot run (the bench's e2e
-            # slot, and any batch pipeline run once) must not pay the
-            # dynamic-partition writer's per-task sort (+11% measured
-            # on the 1x e2e median). The first INCREMENTAL run pays
-            # one upgrade rewrite instead, after which merges touch
-            # only their buckets.
-            self.wh.overwrite(out, "staging", entity)
-            self.metrics.extracted[entity] = obs.get["n"]
         self._touched_buckets[entity] = touched
         # entities write DISJOINT path keys, so concurrent updates from
         # the extract thread pool never collide
@@ -470,29 +431,26 @@ class Pipeline:
 
     def _transform_entity(self, entity: str) -> None:
         pk = PRIMARY_KEYS[entity]
-        if not self.wh.exists("staging", entity):
+        bucket = _bucket_col()
+        staged = self._bucketed("staging", entity)
+        if staged is None:
             return  # nothing staged for this entity; read errors propagate
-        staged = self.wh.read("staging", entity)
-        # Incremental re-transform (r16): the transforms are pure
-        # per-row functions and staging is one-row-per-PK, so rows in
-        # buckets this batch did not touch transform to byte-identical
-        # output — re-derive ONLY the touched staging partitions and
-        # swap them into a bucket-partitioned transformed layer.
-        # Requires (a) bucket knowledge from this run's extract phase,
-        # (b) bucketed staging, and (c) an existing bucketed
-        # transformed table to merge into; anything else falls back to
-        # the full pass (first load, legacy layouts, standalone
-        # run_transform).
+        # The transforms are pure per-row functions and staging holds one
+        # row per PK, so rows in buckets this run's extract did not touch
+        # would transform to byte-identical output: re-derive only the
+        # touched buckets. Without that knowledge (standalone transform,
+        # a crashed previous run) or without a transformed table yet,
+        # every bucket is re-derived. The one partition overwrite serves
+        # both: transformed buckets are always a subset of staging's,
+        # since the transform drops no rows and staging never loses a PK.
         touched = self._touched_buckets.get(entity)
+        # guarded on every pass: a full pass overwrites into it too
         incremental = (
-            touched is not None
-            and "__pk_bucket" in staged.columns
-            and self.wh.exists("transformed", entity)
-            and "__pk_bucket"
-            in self.wh.read("transformed", entity).columns
+            self._bucketed("transformed", entity) is not None
+            and touched is not None
         )
         if incremental:
-            staged = staged.filter(F.col("__pk_bucket").isin(touched))
+            staged = staged.filter(F.col(bucket).isin(touched))
         staged = staged.withColumn("_seq", F.monotonically_increasing_id())
         deduped = dedup_keep_first(staged, pk, "_seq").drop("_seq")
         typed = ENTITY_TRANSFORMS[entity](deduped)
@@ -500,25 +458,13 @@ class Pipeline:
 
         obs = Observation()
         typed = typed.observe(obs, F.count(F.lit(1)).alias("n"))
+        self.wh.overwrite_partitions(typed, "transformed", entity, [bucket])
         if incremental:
-            self.wh.overwrite_partitions(
-                typed, "transformed", entity, ["__pk_bucket"]
-            )
             obs.get  # force the write before the footer-only count
             self.metrics.transformed[entity] = self.wh.read(
                 "transformed", entity
             ).count()
-        elif "__pk_bucket" in typed.columns:
-            # bucketed staging (post-upgrade) but no incremental scope
-            # yet: full pass, written bucketed so the NEXT batch can
-            # re-transform incrementally
-            self.wh.overwrite(
-                typed, "transformed", entity, partition_by=["__pk_bucket"]
-            )
-            self.metrics.transformed[entity] = obs.get["n"]
         else:
-            # first load / legacy layout: the pre-r16 write, unchanged
-            self.wh.overwrite(typed, "transformed", entity)
             self.metrics.transformed[entity] = obs.get["n"]
 
     # -- load: incremental append into production ----------------------------
@@ -535,11 +481,12 @@ class Pipeline:
         the year."""
         for entity in LOAD_ORDER if entities is None else entities:
             pk = PRIMARY_KEYS[entity]
-            if not self.wh.exists("transformed", entity):
+            src = self._bucketed("transformed", entity)
+            if src is None:
                 continue  # entity had no input this run; read errors propagate
             # the bucket is a staging/transformed layout detail — it
             # must never reach the production schema
-            src = self.wh.read("transformed", entity).drop("__pk_bucket")
+            src = src.drop(_bucket_col())
             incremental = self.wh.exists("production", entity)
             if incremental:
                 target = self.wh.read("production", entity)
@@ -590,6 +537,23 @@ class Pipeline:
                 # (which both branches populate)
                 "incremental": incremental,
             }
+
+    def _bucketed(self, layer: str, entity: str) -> DataFrame | None:
+        """The layout guard: ``layer.entity`` read as a DataFrame, None
+        when it does not exist. A table without this build's bucket
+        column (unpartitioned, or bucketed under another width) raises
+        before anything is written: a partition overwrite into it would
+        leave the old rows beside the new ones."""
+        if not self.wh.exists(layer, entity):
+            return None
+        df = self.wh.read(layer, entity)
+        if _bucket_col() not in df.columns:
+            raise ValueError(
+                f"{layer}.{entity} is not partitioned by {_bucket_col()} "
+                "(an older build's layout, or another bucket width): "
+                "rebuild the warehouse from the CSVs with this version"
+            )
+        return df
 
     def _marker_fs_path(self):
         sc = self.spark.sparkContext

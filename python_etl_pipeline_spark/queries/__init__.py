@@ -57,8 +57,16 @@ del _m, _k, _v
 # CORRECTNESS_r*.json files of rounds BEFORE _GATE_ROUND and fails CI
 # if a query past the horizon (including brand-new queries, never
 # verified) is missing from this prefix.
-_GATE_ROUND = 15  # the round this prefix was built for
+_GATE_ROUND = 16  # the round this prefix was built for
 
+# GATE ARITHMETIC, round-16 state — the round-15 prefix stands unchanged
+# as the round-16 gate (CORRECTNESS_r16.json holds exactly these 50
+# rows). (1) is empty: no query's code or oracle changed in round 16.
+# (2) the 4 sentinels lead. (3) at gate round 16 no query is past the
+# horizon-7 bound (the r9 cohort's last driver rows are exactly 7 rounds
+# old), so the staleness check finds nothing to rotate in. Owed at r17:
+# the 13 deferred r9 rows (x49/x50/x52-x62), now overdue there.
+#
 # GATE ARITHMETIC, round-15 state — HORIZON STAYS 7 (bound 7*46 + 4 =
 # 326 vs registry 279; the binding constraint remains the SCHEDULE).
 # Last-driver-row cohorts entering this round: r8:10 (the deferred

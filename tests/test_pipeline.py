@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import datetime
 
-from python_etl_pipeline_spark.pipeline import Pipeline
+from python_etl_pipeline_spark.pipeline import Pipeline, _bucket_col
 
 BRANCHES = (
     "branch_id,branch_name,city,state,manager_name\n"
@@ -338,7 +338,7 @@ def test_crashed_run_heals_every_entity(spark, tmp_path, monkeypatch):
     files = _write_files(tmp_path / "in")
     pipe = Pipeline(spark, str(tmp_path / "wh"))
     pipe.run_full(files)
-    # a normal window upgrades customers to the bucketed layout
+    # a normal window merges into customers' bucket 0
     files = _deliver(files, "customers", tmp_path / "in" / "customers_2.csv", CUST_HEADER
                      + "4,QT0002,four,x,1990-05-05,F,a@x.com,1,addr,2023-03-03\n")
     pipe.run_full(files)
@@ -417,7 +417,7 @@ def test_production_append_is_unpartitioned(spark, tmp_path):
     added = set(after) - set(first)
     assert 1 <= len(added) <= int(spark.conf.get("spark.sql.shuffle.partitions"))
     assert _prod_ids(pipe, "transactions") == {str(i) for i in range(100, 107)}
-    tf = pipe.wh.read("transformed", "transactions").drop("__pk_bucket")
+    tf = pipe.wh.read("transformed", "transactions").drop(_bucket_col())
     prod = pipe.wh.read("production", "transactions")
     assert [(f.name, f.dataType) for f in prod.schema] == [(f.name, f.dataType) for f in tf.schema]
 
@@ -434,8 +434,59 @@ def test_load_refuses_year_partitioned_production(spark, tmp_path):
     pipe = Pipeline(spark, str(tmp_path / "wh"))
     pipe.run_extract(files)
     pipe.run_transform(["transactions"])
-    old = pipe.wh.read("transformed", "transactions").drop("__pk_bucket")
+    old = pipe.wh.read("transformed", "transactions").drop(_bucket_col())
     pipe.wh.append(old.withColumn("transaction_year", F.year("transaction_date")),
                    "production", "transactions", partition_by=["transaction_year"])
     with pytest.raises(ValueError, match="transaction_year"):
         pipe.run_load(["transactions"])
+
+
+def _warehouse_files(pipe):
+    """(layer, entity) -> _layer_files for every staging, transformed and
+    production table."""
+    from python_etl_pipeline_spark.schemas import LOAD_ORDER
+
+    return {(lay, e): _layer_files(pipe, lay, e)
+            for lay in ("staging", "transformed", "production") for e in LOAD_ORDER}
+
+
+def test_run_refuses_unpartitioned_staging(spark, tmp_path):
+    """A staging table written unpartitioned, as an older build did,
+    fails the run before any file is written: a partition overwrite into
+    it would leave the old rows beside the merged ones."""
+    import pytest
+    from python_etl_pipeline_spark.schemas import STAGING_COLUMNS
+    from python_etl_pipeline_spark.sources import read_csv_all_string
+
+    (tmp_path / "in").mkdir()
+    files = _write_files(tmp_path / "in")
+    pipe = Pipeline(spark, str(tmp_path / "wh"))
+    old = read_csv_all_string(spark, files["customers"], STAGING_COLUMNS["customers"])
+    pipe.wh.overwrite(old, "staging", "customers")
+    before = _warehouse_files(pipe)
+    with pytest.raises(ValueError, match=r"staging\.customers"):
+        pipe.run_full({"customers": files["customers"]})
+    assert _warehouse_files(pipe) == before
+    assert before[("staging", "customers")]
+
+
+def test_run_refuses_staging_of_another_bucket_width(spark, tmp_path, monkeypatch):
+    """The partition column's name carries the bucket width: after a
+    width change, a window refuses the warehouse instead of writing a
+    second bucketing of the same PKs into staging."""
+    import pytest
+    from python_etl_pipeline_spark import pipeline
+
+    (tmp_path / "in").mkdir()
+    files = _write_files(tmp_path / "in")
+    pipe = Pipeline(spark, str(tmp_path / "wh"))
+    pipe.run_full(files)
+    before = _warehouse_files(pipe)
+    files = _deliver(files, "customers", tmp_path / "in" / "customers_2.csv", CUST_HEADER
+                     + "4,QT0002,four,x,1990-05-05,F,a@x.com,1,addr,2023-03-03\n")
+    monkeypatch.setattr(pipeline, "_PK_BUCKET_WIDTH", 1000)
+    with pytest.raises(ValueError, match=r"staging\.customers"):
+        pipe.run_full(files)
+    after = _warehouse_files(pipe)
+    assert after == before
+    assert all(after[("staging", e)] for e in ("branches", "customers", "loans", "transactions"))

@@ -1,20 +1,17 @@
-"""Round-16 partitioned-merge nets (verdict #3).
+"""PK-bucketed staging merge and incremental re-transform.
 
-Layout lifecycle: the FIRST load writes staging/transformed
-unpartitioned (byte-for-byte the pre-r16 path, so one-shot runs and
-the bench's e2e slot pay nothing); the first INCREMENTAL run upgrades
-both layers to a __pk_bucket-partitioned layout with one full-merge
-rewrite; every later batch rewrites ONLY the buckets it touches via
+Staging and transformed are partitioned by PK-range bucket from the
+first load; every later batch rewrites ONLY the buckets it touches via
 overwrite_partitions. These tests pin (a) cross-batch last-writer-wins
-semantics across bucket boundaries, (b) that untouched buckets'
-parquet files are literally not rewritten on the steady-state path,
-and (c) that incremental content equals a one-shot run."""
+semantics across bucket boundaries, (b) that untouched buckets' parquet
+files are literally not rewritten by an incremental batch, and (c) that
+incremental content equals a one-shot run."""
 
 from __future__ import annotations
 
 import os
 
-from python_etl_pipeline_spark.pipeline import Pipeline
+from python_etl_pipeline_spark.pipeline import Pipeline, _bucket_col
 
 HEADER = (
     "customer_id,branch_id,first_name,last_name,dob,gender,email,phone,"
@@ -49,33 +46,39 @@ def _staging_files(pipe, layer="staging"):
 
 
 def test_incremental_merge_across_buckets(spark, tmp_path):
-    """Batch 1 (first load, unpartitioned) populates buckets 0 and 2
-    (width 1e6); batch 2 upgrades the layout; batch 3 updates one
-    bucket-0 PK and adds a bucket-9 PK — cross-batch last-writer must
-    win, and bucket 2's parquet files must be byte-identical on disk
-    (mtime-pinned) across the steady-state batch."""
+    """Batch 1 (first load, already bucketed) populates buckets 0 and 2
+    (width 1e6); batch 2 adds a bucket-0 PK; batch 3 updates it and adds
+    a bucket-9 PK — cross-batch last-writer must win, and bucket 2's
+    parquet files must be byte-identical on disk (mtime-pinned) across
+    both incremental batches, in staging and in transformed."""
+    bucket = _bucket_col()
     wh = str(tmp_path / "wh")
     pipe = Pipeline(spark, wh)
     pipe.run_full(
         _batch(tmp_path, "b1", [(5, "alice"), (2_000_001, "carol")])
     )
     assert pipe.metrics.extracted["customers"] == 2
-    # first load: pre-r16 unpartitioned layout, no layout column
-    assert "__pk_bucket" not in pipe.wh.read("staging", "customers").columns
+    assert bucket in pipe.wh.read("staging", "customers").columns
+    assert bucket in pipe.wh.read("transformed", "customers").columns
+    first = _staging_files(pipe)
+    assert any(f"{bucket}=0" in k for k in first)
+    assert any(f"{bucket}=2" in k for k in first)
+    tf_first = _staging_files(pipe, "transformed")
+    assert any(f"{bucket}=2" in k for k in tf_first)
 
-    # batch 2: the upgrade rewrite — staging+transformed become bucketed
+    def bucket2(files):
+        return {k: v for k, v in files.items() if f"{bucket}=2" in k}
+
+    # batch 2: an ordinary incremental window — only bucket 0 touched
     pipe2 = Pipeline(spark, wh)
     pipe2.run_full(_batch(tmp_path, "b2", [(7, "bob")]))
     assert pipe2.metrics.extracted["customers"] == 3
-    staged2 = pipe2.wh.read("staging", "customers")
-    assert "__pk_bucket" in staged2.columns
     before = _staging_files(pipe2)
-    assert any("__pk_bucket=0" in k for k in before)
-    assert any("__pk_bucket=2" in k for k in before)
     tf_before = _staging_files(pipe2, "transformed")
-    assert any("__pk_bucket=2" in k for k in tf_before)
+    assert bucket2(before) == bucket2(first)
+    assert bucket2(tf_before) == bucket2(tf_first)
 
-    # batch 3: steady state — only buckets 0 and 9 are touched
+    # batch 3: only buckets 0 and 9 are touched
     pipe3 = Pipeline(spark, wh)
     pipe3.run_full(
         _batch(tmp_path, "b3", [(7, "bob_v2"), (9_000_001, "dave")])
@@ -83,16 +86,12 @@ def test_incremental_merge_across_buckets(spark, tmp_path):
     assert pipe3.metrics.extracted["customers"] == 4
 
     after = _staging_files(pipe3)
-    keep = {k: v for k, v in before.items() if "__pk_bucket=2" in k}
-    assert keep == {k: v for k, v in after.items() if "__pk_bucket=2" in k}
-    assert {k for k in before if "__pk_bucket=0" in k} != {
-        k for k in after if "__pk_bucket=0" in k
+    assert bucket2(after) == bucket2(before)
+    assert {k for k in before if f"{bucket}=0" in k} != {
+        k for k in after if f"{bucket}=0" in k
     }
     # transformed bucket 2 untouched too (incremental re-transform)
-    tf_after = _staging_files(pipe3, "transformed")
-    assert {
-        k: v for k, v in tf_before.items() if "__pk_bucket=2" in k
-    } == {k: v for k, v in tf_after.items() if "__pk_bucket=2" in k}
+    assert bucket2(_staging_files(pipe3, "transformed")) == bucket2(tf_before)
 
     staged = {
         r["customer_id"]: r["first_name"]
@@ -112,15 +111,14 @@ def test_incremental_merge_across_buckets(spark, tmp_path):
 
     # production: append-only anti-join — one row per PK, no bucket col
     prod = pipe3.wh.read("production", "customers")
-    assert "__pk_bucket" not in prod.columns
+    assert not any(c.startswith("__pk_bucket") for c in prod.columns)
     assert prod.select("customer_id").distinct().count() == 4
 
 
 def test_incremental_matches_oneshot(spark, tmp_path):
     """Three-batch incremental staging+transformed content == a
     one-shot run over the equivalent final state (later batches win on
-    overlap) — upgrade batch AND steady-state batch must both be
-    invisible in the data."""
+    overlap) — the incremental batches must be invisible in the data."""
     wh_inc = str(tmp_path / "wh_inc")
     Pipeline(spark, wh_inc).run_full(
         _batch(tmp_path, "i1", [(1, "a"), (2, "b"), (3_000_000, "c")])
@@ -145,11 +143,11 @@ def test_incremental_matches_oneshot(spark, tmp_path):
         inc = sorted(
             tuple(r)
             for r in Pipeline(spark, wh_inc).wh.read(layer, "customers")
-            .drop("__pk_bucket").collect()
+            .drop(_bucket_col()).collect()
         )
         one = sorted(
             tuple(r)
             for r in Pipeline(spark, wh_one).wh.read(layer, "customers")
-            .drop("__pk_bucket").collect()
+            .drop(_bucket_col()).collect()
         )
         assert inc == one, layer

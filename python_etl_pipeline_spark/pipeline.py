@@ -10,7 +10,13 @@ Fail-fast per phase like the reference's run_full_pipeline
 Scale design: no driver-side row loops anywhere — the only driver
 values are per-phase row counts (one scalar action per table); merges
 are keyed shuffles. A scheduled window transforms and loads only the
-entities that received new files (every entity after a crashed run).
+entities that received new files.
+
+Crash recovery is one open-run flag, ``<warehouse>/_run_marker``:
+extract creates it before it changes staging and ``run_full`` deletes
+it after load. A window that finds the flag present re-transforms and
+re-loads every entity from all of staging, so whatever an unfinished
+run staged reaches production.
 
 One layout per layer, from the first write on: staging and transformed
 are partitioned by PK-range bucket, and each is written by one
@@ -45,12 +51,12 @@ from .operators import (
     validate_and_project,
     pk_filter,
     normalize_nulls,
-    dedup_keep_first,
     dedup_keep_last,
 )
 from .plans import upsert_last_writer_wins, incremental_append_antijoin, reconcile_counts
 from .schemas import STAGING_COLUMNS, PRIMARY_KEYS, LOAD_ORDER
 from .sources import IngestLog, Warehouse, read_csv_all_string
+from .sources.warehouse import hadoop_fs
 
 
 # ---------------------------------------------------------------------------
@@ -260,9 +266,8 @@ class Pipeline:
         # path -> raw record count for the batch in flight (filled by
         # _extract_entity Observations, consumed by the log append)
         self._file_record_counts: dict[str, int] = {}
-        # files the batch in flight appended to the ingest log, and the
-        # entities they belong to (run_full's skip signals)
-        self._n_new_files = 0
+        # entities with new files in the batch in flight (run_full's skip
+        # signal)
         self._changed_entities: set[str] = set()
         # entity -> PK buckets touched by the batch in flight (filled by
         # _extract_entity, consumed by _transform_entity to re-transform
@@ -285,7 +290,8 @@ class Pipeline:
         hashes the anti-join already computed, so no file is read twice
         for hashing. Failure semantics: if any entity fails, NOTHING is
         logged, and the next run re-ingests the whole batch — safe, the
-        staging write is an idempotent overwrite.
+        staging write is an idempotent overwrite. A batch with new files
+        opens the run flag before any staging write (``run_full``).
 
         Each log row carries the file's REAL raw record count (the
         reference tracker stores rows-per-file, extract.py:246-270, and
@@ -309,8 +315,12 @@ class Pipeline:
             (entity, [p for p in paths if p in new_set])
             for entity, paths in files_per_entity.items()
         ]
-        self._n_new_files = len(new_set)
         self._changed_entities = {entity for entity, paths in items if paths}
+        if new_set:
+            # open the run before staging changes: from here until
+            # run_full's load completes, a crash leaves the flag behind
+            fs, flag = self._run_flag()
+            fs.create(flag, True).close()
         with ThreadPoolExecutor(max_workers=min(8, max(1, len(items)))) as ex:
             list(ex.map(lambda kv: self._extract_entity(*kv), items))
         self.ingest_log.mark_processed_batch(
@@ -386,10 +396,10 @@ class Pipeline:
             existing = existing.filter(F.col(bucket).isin(touched)).drop(
                 bucket
             ).withColumn("_ingest_seq", F.lit(-1).cast("long"))
-            # break lineage before overwriting the directory being read
-            df = upsert_last_writer_wins(
-                existing, df, pk, "_ingest_seq"
-            ).localCheckpoint(eager=True)
+            # no lineage barrier needed before overwriting the buckets
+            # this plan reads: a dynamic partition overwrite stages its
+            # output and swaps the partitions in only at job commit
+            df = upsert_last_writer_wins(existing, df, pk, "_ingest_seq")
         # fold the row-count metric into the write job (Observation):
         # the count is computed by the tasks that write, not a second job
         obs = Observation()
@@ -430,17 +440,18 @@ class Pipeline:
             list(ex.map(self._transform_entity, ents))
 
     def _transform_entity(self, entity: str) -> None:
-        pk = PRIMARY_KEYS[entity]
         bucket = _bucket_col()
         staged = self._bucketed("staging", entity)
         if staged is None:
             return  # nothing staged for this entity; read errors propagate
-        # The transforms are pure per-row functions and staging holds one
-        # row per PK, so rows in buckets this run's extract did not touch
-        # would transform to byte-identical output: re-derive only the
-        # touched buckets. Without that knowledge (standalone transform,
-        # a crashed previous run) or without a transformed table yet,
-        # every bucket is re-derived. The one partition overwrite serves
+        # Staging holds one row per PK (extract's keep-last, then the
+        # last-writer-wins merge into the PK's own bucket), so no dedup
+        # runs here. The transforms are pure per-row functions, so rows in
+        # buckets this run's extract did not touch would transform to
+        # byte-identical output: re-derive only the touched buckets.
+        # Without that knowledge (standalone transform, an unfinished
+        # previous run) or without a transformed table yet, every bucket
+        # is re-derived. The one partition overwrite serves
         # both: transformed buckets are always a subset of staging's,
         # since the transform drops no rows and staging never loses a PK.
         touched = self._touched_buckets.get(entity)
@@ -451,9 +462,7 @@ class Pipeline:
         )
         if incremental:
             staged = staged.filter(F.col(bucket).isin(touched))
-        staged = staged.withColumn("_seq", F.monotonically_increasing_id())
-        deduped = dedup_keep_first(staged, pk, "_seq").drop("_seq")
-        typed = ENTITY_TRANSFORMS[entity](deduped)
+        typed = ENTITY_TRANSFORMS[entity](staged)
         from pyspark.sql import Observation
 
         obs = Observation()
@@ -500,8 +509,9 @@ class Pipeline:
                         f"table lacks: {stale}; rebuild production from "
                         "the CSVs with this version"
                     )
-                # materialize the delta before appending into the scanned dir
-                delta = incremental_append_antijoin(src, target, pk).localCheckpoint(eager=True)
+                # an append adds files and leaves the ones this plan
+                # listed alone, so the delta needs no lineage barrier
+                delta = incremental_append_antijoin(src, target, pk)
                 self.wh.append(delta, "production", entity)
                 # one read-back count serves both the loaded metric and the
                 # reconciliation target side (was two scans of production)
@@ -555,44 +565,13 @@ class Pipeline:
             )
         return df
 
-    def _marker_fs_path(self):
-        sc = self.spark.sparkContext
-        path = sc._jvm.org.apache.hadoop.fs.Path(f"{self.wh.root}/_run_marker")
-        return path.getFileSystem(sc._jsc.hadoopConfiguration()), path
-
-    def _write_success_marker(self, n_files: int) -> None:
-        """Record that a run COMPLETED (extract through load) with
-        ``n_files`` files in the ingest log. Driver-side metadata IO via
-        the Hadoop FS API (scheme-agnostic, object-store-safe) — NOT a
-        Spark write: a 1-row ``createDataFrame(...).write.parquet`` was
-        measured at 3.6 s per run (it drags a Python-worker exchange
-        into the job), which doubled the 107k-row pipeline's wall. The
-        FS write is ~ms."""
-        fs, path = self._marker_fs_path()
-        out = fs.create(path, True)
-        try:
-            out.write(str(n_files).encode("ascii"))
-        finally:
-            out.close()
-
-    def _read_marker(self) -> int | None:
-        """The ingest-log size the last COMPLETED run saw; None when no
-        run has completed or the marker is unreadable."""
-        sc = self.spark.sparkContext
-        try:
-            fs, path = self._marker_fs_path()
-            if not fs.exists(path):
-                return None
-            stream = fs.open(path)
-            try:
-                text = sc._jvm.org.apache.commons.io.IOUtils.toString(
-                    stream, "UTF-8"
-                )
-            finally:
-                stream.close()
-            return int(text.strip())
-        except Exception:
-            return None  # unreadable/garbled marker -> run everything
+    def _run_flag(self):
+        """``(fs, path)`` of the open-run flag, ``<warehouse>/_run_marker``:
+        present from the moment a run starts changing staging until its
+        load completes. Only its presence counts. Driver-side Hadoop FS
+        metadata IO, not a Spark write (SCALE.md: a 1-row parquet write
+        of the marker cost 3.6 s per run)."""
+        return hadoop_fs(self.spark, f"{self.wh.root}/_run_marker")
 
     def run_full(self, files_per_entity: dict[str, list[str]]) -> dict:
         """Fail-fast phase runner with per-phase timing logs (M1/M3:
@@ -600,36 +579,38 @@ class Pipeline:
         only.
 
         Per-entity skip (the reference's hash-skip, extract.py:494-496,
-        applied to each entity): after extract, one ingest-log summary
-        tells whether the last run completed — the success marker equals
-        the log's file count minus the files this window appended. If
-        it did, transform and load run only for the entities that
+        applied to each entity) behind an open-run flag
+        (``<warehouse>/_run_marker``): extract creates the flag before it
+        writes staging, and this runner deletes it after load. The flag
+        is checked once, before extract. If it is absent, the last run
+        completed, so transform and load run only for the entities that
         received new files; the others would recompute byte-identical
-        tables from unchanged staging. A window with no new file then
-        skips both phases ('no_new_files'). If the last run did not
-        complete (a crash between extract and load leaves the marker
-        behind the log, or absent), every entity is re-transformed in
-        full and re-loaded, so the crashed run's staged rows reach
-        production. The summary names the skipped entities."""
+        tables from unchanged staging, and a window with no new file
+        skips both phases ('no_new_files'). If it is present, a run
+        changed staging and did not reach the end of load (a crash, or a
+        standalone extract), so every entity is re-transformed in full
+        and re-loaded, and that run's staged rows reach production. The
+        summary names the skipped entities."""
         import logging
         import time
 
         log = logging.getLogger("spark_etl_engine.pipeline")
         self.metrics = PipelineMetrics()
         timings: dict[str, float] = {}
+        fs, flag = self._run_flag()
+        previous_open = bool(fs.exists(flag))
         t0 = time.time()
         self.run_extract(files_per_entity)
         timings["extract"] = round(time.time() - t0, 3)
         log.info("phase extract done in %.1fs", timings["extract"])
-        n_logged = int(self.ingest_log.summary().first()["n_files"] or 0)
-        if self._read_marker() == n_logged - self._n_new_files:
-            entities = [e for e in LOAD_ORDER if e in self._changed_entities]
-        else:
+        if previous_open:
             log.info("previous run did not complete — every entity runs")
             entities = None
-            # the crashed run may have staged buckets this batch did not
+            # the open run may have staged buckets this batch did not
             # touch: re-derive every entity from all of staging
             self._touched_buckets.clear()
+        else:
+            entities = [e for e in LOAD_ORDER if e in self._changed_entities]
         skipped = [] if entities is None else [e for e in LOAD_ORDER if e not in entities]
         if entities == []:
             summary = {**self.metrics.summary(), "phase_seconds": timings,
@@ -644,7 +625,7 @@ class Pipeline:
             fn(entities)
             timings[phase] = round(time.time() - t0, 3)
             log.info("phase %s done in %.1fs", phase, timings[phase])
-        self._write_success_marker(n_logged)
+        fs.delete(flag, False)
         summary = {**self.metrics.summary(), "phase_seconds": timings,
                    "no_new_files": False, "skipped_entities": skipped}
         for line in self.metrics.format_report(timings):

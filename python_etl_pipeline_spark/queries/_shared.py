@@ -65,9 +65,9 @@ _FIRST_ROUND: dict[str, int] = {}
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
-        # events.parquet stores TIMESTAMP(NANOS) which the vectorized parquet
-        # reader rejects; read nanos as long and convert (micro precision).
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # an events.parquet with TIMESTAMP(NANOS) reads as a long under
+        # spark.sql.legacy.parquet.nanosAsLong (set by session.get_spark):
+        # convert it (micro precision). Microsecond files read as-is.
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         if dict(df.dtypes).get("ts") == "bigint":
             # integer DIV, not `/`: double division of ~1e18 nanos loses

@@ -53,6 +53,10 @@ def get_spark(app_name: str = "spark-etl-engine", *, cpus: int | None = None) ->
             os.environ.get("SPARK_GRAFT_PREFER_SMJ", "true"),
         )
         .config("spark.sql.session.timeZone", "UTC")
+        # events.parquet may store TIMESTAMP(NANOS), which Spark reads
+        # only as a long under this conf (queries._t converts it); set at
+        # build time, so the query path never touches the session conf
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))

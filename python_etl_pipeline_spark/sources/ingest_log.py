@@ -25,6 +25,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from ..functions.cleansing import file_md5
+from .warehouse import hadoop_fs
 
 def _md5_udf():
     """Executor-side streaming file MD5 (same algorithm as
@@ -58,9 +59,7 @@ class IngestLog:
         self._write_lock = threading.Lock()
 
     def _exists(self) -> bool:
-        sc = self.spark.sparkContext
-        p = sc._jvm.org.apache.hadoop.fs.Path(self.log_dir)
-        fs = p.getFileSystem(sc._jsc.hadoopConfiguration())
+        fs, p = hadoop_fs(self.spark, self.log_dir)
         return bool(fs.exists(p))
 
     def _read(self):

@@ -14,6 +14,15 @@ from pyspark.sql import DataFrame, SparkSession
 LAYERS = ("staging", "transformed", "production")
 
 
+def hadoop_fs(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path`` through the Hadoop FS API:
+    scheme-agnostic (local, HDFS, object stores) driver-side metadata IO
+    that runs no Spark job."""
+    sc = spark.sparkContext
+    p = sc._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(sc._jsc.hadoopConfiguration()), p
+
+
 class Warehouse:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -42,9 +51,7 @@ class Warehouse:
         HDFS, object stores). Callers use this instead of catching read
         exceptions — a corrupt table then fails loudly instead of being
         silently treated as "first run"."""
-        sc = self.spark.sparkContext
-        p = sc._jvm.org.apache.hadoop.fs.Path(self.path(layer, table))
-        fs = p.getFileSystem(sc._jsc.hadoopConfiguration())
+        fs, p = hadoop_fs(self.spark, self.path(layer, table))
         return bool(fs.exists(p))
 
     def qualified_uri(self, path: str) -> str:
@@ -56,9 +63,7 @@ class Warehouse:
         cross-file keep-last rank fall back to monotonic-id enumeration
         order (correct only by local-mode accident) and zeroed every
         observed per-file record count."""
-        sc = self.spark.sparkContext
-        p = sc._jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(sc._jsc.hadoopConfiguration())
+        fs, p = hadoop_fs(self.spark, path)
         return fs.makeQualified(p).toUri().toString()
 
     def overwrite(self, df: DataFrame, layer: str, table: str,
@@ -242,11 +247,8 @@ class Warehouse:
             if self.exists(layer, table):
                 _swap_compacted(self.spark, final, staging)
             else:
-                sc = self.spark.sparkContext
-                hadoop = sc._jvm.org.apache.hadoop.fs.Path
-                p_stage, p_final = hadoop(staging), hadoop(final)
-                fs = p_final.getFileSystem(sc._jsc.hadoopConfiguration())
-                if not fs.rename(p_stage, p_final):
+                fs, p_final = hadoop_fs(self.spark, final)
+                if not fs.rename(p_final.suffix(".staging"), p_final):
                     raise IOError(
                         f"publish: rename {staging} -> {final} failed; "
                         f"staged data intact"
@@ -294,11 +296,7 @@ class Warehouse:
 
         from pyspark.sql import functions as F
 
-        sc = self.spark.sparkContext
-        jvm = sc._jvm
-        conf = sc._jsc.hadoopConfiguration()
-        cur = jvm.org.apache.hadoop.fs.Path(self.path(layer, table))
-        fs = cur.getFileSystem(conf)
+        fs, cur = hadoop_fs(self.spark, self.path(layer, table))
         summary = fs.getContentSummary(cur)
         total_bytes = summary.getLength()
 
@@ -313,7 +311,7 @@ class Warehouse:
 
         files_before = _count_files(cur)
         n_files = max(1, math.ceil(total_bytes / target_file_bytes))
-        tmp = jvm.org.apache.hadoop.fs.Path(self.path(layer, table) + "__compact_tmp")
+        tmp = cur.suffix("__compact_tmp")
         df = self.read(layer, table)
         if partition_by:
             # Per-directory file budget: rows_p * (total_bytes / total_rows)
@@ -388,7 +386,7 @@ class Warehouse:
         else:
             # coalesce, not repartition: narrowing file count needs no shuffle
             df.coalesce(n_files).write.mode("overwrite").parquet(tmp.toString())
-        old = jvm.org.apache.hadoop.fs.Path(self.path(layer, table) + "__compact_old")
+        old = cur.suffix("__compact_old")
         if not fs.rename(cur, old):
             raise IOError(f"compact: could not move {cur} aside")
         if not fs.rename(tmp, cur):
@@ -451,10 +449,8 @@ def _drop_table_and_location(spark: SparkSession, db: str, table: str) -> None:
     }
     if not is_external:
         targets.add(loc_str)
-    sc = spark.sparkContext
     for t in targets:
-        loc = sc._jvm.org.apache.hadoop.fs.Path(t)
-        fs = loc.getFileSystem(sc._jsc.hadoopConfiguration())
+        fs, loc = hadoop_fs(spark, t)
         if fs.exists(loc):
             fs.delete(loc, True)
 

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import datetime
 
+import pytest
+
 from python_etl_pipeline_spark.pipeline import Pipeline, _bucket_col
 
 BRANCHES = (
@@ -68,8 +70,8 @@ def test_full_pipeline(spark, tmp_path):
     assert cust["1"]["customer_segment"] in ("VIP", "Regular", "New")
     # impossible date 31-09-45 -> null dob, age 0
     assert cust["2"]["dob"] is None and cust["2"]["age"] == 0
-    # keep-first dedup at transform
-    assert cust["3"]["last_name"] == "Last" or cust["3"]["last_name"] == "First"
+    # extract's keep-last dedup: the later row of pk 3 wins
+    assert cust["3"]["last_name"] == "Last"
 
     loans = {r["loan_id"]: r for r in pipe.wh.read("transformed", "loans").collect()}
     assert float(loans["10"]["loan_amount"]) == 600000.0
@@ -286,11 +288,11 @@ def _deliver(files, entity, path, content):
     return out
 
 
-def _prod_ids(pipe, entity):
+def _prod_ids(pipe, entity, layer="production"):
     from python_etl_pipeline_spark.schemas import PRIMARY_KEYS
 
-    ids = [r[0] for r in pipe.wh.read("production", entity).select(PRIMARY_KEYS[entity]).collect()]
-    assert len(ids) == len(set(ids)), f"duplicate PKs in production.{entity}"
+    ids = [r[0] for r in pipe.wh.read(layer, entity).select(PRIMARY_KEYS[entity]).collect()]
+    assert len(ids) == len(set(ids)), f"duplicate PKs in {layer}.{entity}"
     return set(ids)
 
 
@@ -323,6 +325,10 @@ def test_window_transforms_and_loads_only_entities_with_new_files(spark, tmp_pat
     assert _prod_ids(pipe, "transactions") == {"100", "101"}
     staged = {r["customer_id"]: r["last_name"] for r in pipe.wh.read("staging", "customers").collect()}
     assert staged["2"] == "changed"
+    # one row per PK in staging: the transform relies on it and dedups nothing
+    assert _prod_ids(pipe, "customers", "staging") == {"1", "2", "3", "4"}
+    for e in others:
+        _prod_ids(pipe, e, "staging")
 
 
 def test_crashed_run_heals_every_entity(spark, tmp_path, monkeypatch):
@@ -364,6 +370,74 @@ def test_crashed_run_heals_every_entity(spark, tmp_path, monkeypatch):
     assert _prod_ids(pipe, "customers") == {"1", "2", "3", "4", "2000001", "6"}
     # healed: the marker is current again, so a re-run skips everything
     assert pipe.run_full(files)["no_new_files"] is True
+
+
+@pytest.mark.parametrize(
+    "stop_at", ["staging_write", "transform", "production_append", "standalone_extract"]
+)
+def test_unfinished_run_heals_on_next_window(spark, tmp_path, monkeypatch, stop_at):
+    """A run that changed staging and did not finish its load (a crash
+    after one staging write, in transform, or after the first production
+    append; or a standalone extract) is healed by the next window, on a
+    fresh Pipeline: every entity runs, production holds exactly the
+    distinct valid PKs delivered, staging and transformed the
+    last-delivered values, and the window after that skips everything."""
+    from python_etl_pipeline_spark.schemas import LOAD_ORDER
+
+    (tmp_path / "in").mkdir()
+    files = _write_files(tmp_path / "in")
+    wh = str(tmp_path / "wh")
+    pipe = Pipeline(spark, wh)
+    pipe.run_full(files)
+    # re-delivers customer 2, adds one in another bucket and a transaction
+    files = _deliver(files, "customers", tmp_path / "in" / "customers_2.csv", CUST_HEADER
+                     + "2,QT0002,vik,crashed,1945-01-01,male,v@x.com,1,addr,2019-06-01\n"
+                     + "2000001,QT0002,far,x,1990-05-05,F,f@x.com,1,addr,2023-03-03\n")
+    files = _deliver(files, "transactions", tmp_path / "in" / "transactions_2.csv",
+                     TRANSACTIONS.splitlines()[0] + "\n102,2,2024-02-01,deposit,10,10,no\n")
+
+    def crash_after(sink, layer):
+        orig = getattr(pipe.wh, sink)
+
+        def write_then_crash(df, lay, *a, **k):
+            orig(df, lay, *a, **k)
+            if lay == layer:
+                raise RuntimeError("simulated crash")
+        monkeypatch.setattr(pipe.wh, sink, write_then_crash)
+
+    def crash(*_a, **_k):
+        raise RuntimeError("simulated crash")
+
+    if stop_at == "standalone_extract":
+        pipe.run_extract(files)
+    else:
+        if stop_at == "staging_write":
+            crash_after("overwrite_partitions", "staging")
+        elif stop_at == "transform":
+            monkeypatch.setattr(pipe, "run_transform", crash)
+        else:
+            crash_after("append", "production")
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            pipe.run_full(files)
+        monkeypatch.undo()
+
+    files = _deliver(files, "customers", tmp_path / "in" / "customers_3.csv", CUST_HEADER
+                     + "5,QT0001,five,x,1990-05-05,F,g@x.com,1,addr,2023-03-03\n")
+    healer = Pipeline(spark, wh)
+    s = healer.run_full(files)
+    assert s["skipped_entities"] == []
+    assert all(r["synced"] for r in healer.metrics.reconciliation.values())
+    assert _prod_ids(healer, "customers") == {"1", "2", "3", "2000001", "5"}
+    assert _prod_ids(healer, "transactions") == {"100", "101", "102"}
+    assert _prod_ids(healer, "branches") == {"QT0001", "QT0002", "QT0003"}
+    assert _prod_ids(healer, "loans") == {"10", "11", "12"}
+    for e in LOAD_ORDER:
+        _prod_ids(healer, e, "staging")
+    staged = {r["customer_id"]: r["last_name"] for r in healer.wh.read("staging", "customers").collect()}
+    assert staged["2"] == "crashed" and set(staged) == {"1", "2", "3", "2000001", "5"}
+    typed = {r["customer_id"]: r["last_name"] for r in healer.wh.read("transformed", "customers").collect()}
+    assert typed["2"] == "Crashed"
+    assert healer.run_full(files)["no_new_files"] is True
 
 
 def test_reused_pipeline_does_not_retransform_entity_without_new_files(spark, tmp_path):

@@ -110,11 +110,17 @@ def main() -> int:
     n = min(args.shards, len(files))
     w = _weights(files)
     shards = _lpt(files, w, n)
-    cpus = max(32 // (max(n, 1) + (1 if args.parity else 0)), 4)
+    n_jvms = len(shards) + (1 if args.parity else 0)
+    cpus = max(32 // max(n_jvms, 1), 4)
+    # each shard and the parity sweep run their own JVM: split physical
+    # memory between them, one share held back for the Python processes,
+    # the OS and the JVMs' off-heap memory; never above 4g each
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    heap = f"{min(4096, phys_mb // (n_jvms + 1))}m"
 
     print(
         f"partest: {len(files)} files -> {len(shards)} shards, "
-        f"{cpus} spark threads each "
+        f"{cpus} spark threads and a {heap} heap each "
         f"(planned: {[round(sum(w[f] for f in s)) for s in shards]}s)"
     )
     t0 = time.time()
@@ -123,7 +129,7 @@ def main() -> int:
         env = dict(
             os.environ,
             SPARK_GRAFT_CPUS=str(cpus),
-            SPARK_DRIVER_MEMORY="4g",
+            SPARK_DRIVER_MEMORY=heap,
         )
         parity_proc = subprocess.Popen(
             [sys.executable, "tools/parity.py", args.parity],
@@ -136,7 +142,7 @@ def main() -> int:
         env = dict(
             os.environ,
             SPARK_GRAFT_CPUS=str(cpus),
-            SPARK_DRIVER_MEMORY="4g",
+            SPARK_DRIVER_MEMORY=heap,
         )
         p = subprocess.Popen(
             [sys.executable, "-m", "pytest", "-q", "--no-header",

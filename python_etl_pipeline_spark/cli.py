@@ -208,7 +208,7 @@ def run(args: argparse.Namespace, spark=None) -> dict:
             counts = {}
             for entity in LOAD_ORDER:
                 if pipe.wh.exists(layer, entity):
-                    counts[entity] = pipe.wh.read(layer, entity).count()
+                    counts[entity] = pipe.wh.row_count(layer, entity)
             report[layer] = counts
         return report
     # schedule: the reference's poll loop, sequential by construction,

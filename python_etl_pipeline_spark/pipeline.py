@@ -7,14 +7,18 @@ accounting (main.py:43-144), and reconciles counts (load.py:317-360).
 Fail-fast per phase like the reference's run_full_pipeline
 (main.py:279-308).
 
-Scale design: no driver-side row loops anywhere — the only driver
-values are per-phase row counts (one scalar action per table); merges
-are keyed shuffles. A scheduled window transforms and loads only the
-entities that received new files.
+Scale design: no driver-side row loops anywhere, and a window runs no
+Spark job it does not need. Every warehouse read pins its declared
+schema (no inference job); the per-table row counts are summed from
+Parquet footers on the driver (``Warehouse.row_count``, no job); the
+batch's touched buckets come from an Observation on the job that pins
+the batch; merges are keyed shuffles. A scheduled window transforms and
+loads only the entities that received new files.
 
 Crash recovery is one open-run flag, ``<warehouse>/_run_marker``:
 extract creates it before it changes staging and ``run_full`` deletes
-it after load. A window that finds the flag present re-transforms and
+it after load. A window that finds the flag present first finishes any
+partition-overwrite commit a crash interrupted, then re-transforms and
 re-loads every entity from all of staging, so whatever an unfinished
 run staged reaches production.
 
@@ -30,10 +34,12 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .functions import (
+    normalize_null_sentinels,
     safe_val,
     safe_num,
     safe_date,
@@ -50,13 +56,18 @@ from .functions import (
 from .operators import (
     validate_and_project,
     pk_filter,
-    normalize_nulls,
     dedup_keep_last,
 )
-from .plans import upsert_last_writer_wins, incremental_append_antijoin, reconcile_counts
-from .schemas import STAGING_COLUMNS, PRIMARY_KEYS, LOAD_ORDER
+from .plans import upsert_last_writer_wins, incremental_append_antijoin
+from .schemas import (
+    LOAD_ORDER,
+    PRIMARY_KEYS,
+    STAGING_COLUMNS,
+    TRANSFORMED_SCHEMAS,
+    staging_schema,
+)
 from .sources import IngestLog, Warehouse, read_csv_all_string
-from .sources.warehouse import hadoop_fs
+from .sources.warehouse import hadoop_fs, hidden
 
 
 # ---------------------------------------------------------------------------
@@ -67,9 +78,9 @@ from .sources.warehouse import hadoop_fs
 # and the transformed layer's partition overwrite would then replace
 # that bucket without the rows already in it.
 
-def transform_branches(df: DataFrame) -> DataFrame:
+def _branches_columns() -> list[Column]:
     state = safe_val(F.col("state"), upper=True)
-    return df.select(
+    return [
         safe_val(F.col("branch_id")).alias("branch_id"),
         safe_val(F.col("branch_name"), title=True).alias("branch_name"),
         safe_val(F.col("city"), title=True).alias("city"),
@@ -77,14 +88,14 @@ def transform_branches(df: DataFrame) -> DataFrame:
         safe_val(F.col("manager_name"), title=True).alias("manager_name"),
         region_map(state).alias("region"),
         F.col(_bucket_col()),
-    )
+    ]
 
 
-def transform_customers(df: DataFrame) -> DataFrame:
+def _customers_columns() -> list[Column]:
     dob = safe_date(F.col("dob"))
     aod = safe_date(F.col("account_open_date"))
     tenure = tenure_days(aod)
-    return df.select(
+    return [
         safe_val(F.col("customer_id")).alias("customer_id"),
         safe_val(F.col("branch_id"), upper=True).alias("branch_id"),
         safe_val(F.col("first_name"), title=True).alias("first_name"),
@@ -99,15 +110,15 @@ def transform_customers(df: DataFrame) -> DataFrame:
         tenure.alias("customer_tenure_days"),
         customer_segment(tenure).alias("customer_segment"),
         F.col(_bucket_col()),
-    )
+    ]
 
 
-def transform_loans(df: DataFrame) -> DataFrame:
+def _loans_columns() -> list[Column]:
     start = safe_date(F.col("start_date"))
     # end dates legitimately exceed the current year: lift the guard
     end = safe_date(F.col("end_date"), max_year=F.lit(9999))
     amount = safe_num(F.col("loan_amount"))
-    return df.select(
+    return [
         safe_val(F.col("loan_id")).alias("loan_id"),
         safe_val(F.col("customer_id")).alias("customer_id"),
         safe_val(F.col("loan_type"), title=True).alias("loan_type"),
@@ -119,12 +130,12 @@ def transform_loans(df: DataFrame) -> DataFrame:
         duration_months(start, end).alias("loan_duration_months"),
         risk_category(amount).alias("risk_category"),
         F.col(_bucket_col()),
-    )
+    ]
 
 
-def transform_transactions(df: DataFrame) -> DataFrame:
+def _transactions_columns() -> list[Column]:
     amount = safe_num(F.col("amount"))
-    return df.select(
+    return [
         safe_val(F.col("transaction_id")).alias("transaction_id"),
         safe_val(F.col("customer_id")).alias("customer_id"),
         safe_date(F.col("transaction_date")).cast("timestamp").alias("transaction_date"),
@@ -134,7 +145,35 @@ def transform_transactions(df: DataFrame) -> DataFrame:
         fraud_flag(F.col("fraud_flag")).alias("fraud_flag"),
         transaction_category(amount).alias("transaction_category"),
         F.col(_bucket_col()),
-    )
+    ]
+
+
+# entity -> the function that builds its transform's output columns. A list
+# takes thousands of py4j calls to build, all holding the GIL, so a Pipeline builds
+# each once (Pipeline._columns) and the transform pool threads do not
+# queue on one another for it.
+_ENTITY_COLUMNS = {
+    "branches": _branches_columns,
+    "customers": _customers_columns,
+    "loans": _loans_columns,
+    "transactions": _transactions_columns,
+}
+
+
+def transform_branches(df: DataFrame) -> DataFrame:
+    return df.select(*_branches_columns())
+
+
+def transform_customers(df: DataFrame) -> DataFrame:
+    return df.select(*_customers_columns())
+
+
+def transform_loans(df: DataFrame) -> DataFrame:
+    return df.select(*_loans_columns())
+
+
+def transform_transactions(df: DataFrame) -> DataFrame:
+    return df.select(*_transactions_columns())
 
 
 ENTITY_TRANSFORMS = {
@@ -255,6 +294,17 @@ def _pk_bucket(pk: str):
     ).cast("bigint")
 
 
+def _read_schema(layer: str, entity: str) -> T.StructType:
+    """The declared schema of ``layer.entity``, pinned on every pipeline
+    read so that no read runs a schema-inference job: staging is all
+    strings and transformed the transform's output, each with the bucket
+    column; production is the transform's output without it."""
+    if layer == "production":
+        return TRANSFORMED_SCHEMAS[entity]
+    base = staging_schema(entity) if layer == "staging" else TRANSFORMED_SCHEMAS[entity]
+    return T.StructType(base.fields + [T.StructField(_bucket_col(), T.LongType())])
+
+
 class Pipeline:
     """Extract → transform → load over a layered warehouse."""
 
@@ -274,6 +324,24 @@ class Pipeline:
         # only the staging partitions this batch changed). None = no
         # bucket knowledge — transform falls back to the full pass.
         self._touched_buckets: dict[str, list[int] | None] = {}
+        # (kind, entity, bucket column) -> column expressions, built once
+        # per Pipeline (_columns)
+        self._exprs: dict[tuple[str, str, str], list[Column]] = {}
+
+    def _columns(self, kind: str, entity: str) -> list[Column]:
+        """The ``"transform"`` output columns or the ``"nulls"`` sentinel
+        cleansing of ``entity``'s staging columns, built on first use.
+        Keyed on the bucket column too, whose name carries the width."""
+        key = (kind, entity, _bucket_col())
+        cols = self._exprs.get(key)
+        if cols is None:
+            if kind == "transform":
+                cols = _ENTITY_COLUMNS[entity]()
+            else:
+                cols = [normalize_null_sentinels(c).alias(c)
+                        for c in STAGING_COLUMNS[entity]]
+            self._exprs[key] = cols
+        return cols
 
     # -- extract: CSV files -> all-string staging layer ----------------------
     def run_extract(self, files_per_entity: dict[str, list[str]]) -> None:
@@ -303,6 +371,9 @@ class Pipeline:
         a real run)."""
         from concurrent.futures import ThreadPoolExecutor
 
+        fs, flag = self._run_flag()
+        if fs.exists(flag):
+            self._roll_forward_commits()
         all_paths = [p for ps in files_per_entity.values() for p in ps]
         new_rows = (
             self.ingest_log.new_files_df(all_paths).collect() if all_paths else []
@@ -319,7 +390,6 @@ class Pipeline:
         if new_set:
             # open the run before staging changes: from here until
             # run_full's load completes, a crash leaves the flag behind
-            fs, flag = self._run_flag()
             fs.create(flag, True).close()
         with ThreadPoolExecutor(max_workers=min(8, max(1, len(items)))) as ex:
             list(ex.map(lambda kv: self._extract_entity(*kv), items))
@@ -342,8 +412,6 @@ class Pipeline:
         # through this observe during the staging write, so the counts
         # cost no extra scan. One count expression per batch file:
         # bounded by the batch's file list, never the row count.
-        from pyspark.sql import Observation
-
         file_obs = Observation()
         raw = raw.observe(
             file_obs,
@@ -357,7 +425,7 @@ class Pipeline:
             ],
         )
         df = validate_and_project(raw, STAGING_COLUMNS[entity])
-        df = normalize_nulls(df)
+        df = df.select(*self._columns("nulls", entity))
         df = pk_filter(df, pk)
         # keep-last across files must mean "the later file in the batch
         # wins" (O2, reference extract.py:389) — an EXPLICIT file sequence,
@@ -378,19 +446,19 @@ class Pipeline:
             F.coalesce(seq_map[F.input_file_name()], F.lit(-1)).cast("long"),
         ).withColumn("_ingest_sub", F.monotonically_increasing_id())
         df = dedup_keep_last(df, pk, ["_ingest_seq", "_ingest_sub"]).drop("_ingest_sub")
-        # Touched-bucket discovery needs an action over the batch, so it
-        # runs only when there is a snapshot to merge into, off a pinned
-        # batch frame that the merge then reuses; a first load pays no
-        # extra job.
+        # The merge needs the batch's touched buckets before it is
+        # planned, so there is one action over the batch, and only when a
+        # snapshot exists: the batch frame is pinned, and an Observation
+        # on the pinning job collects the bucket set on the way.
         bucket = _bucket_col()
         touched: list[int] | None = None
         existing = self._bucketed("staging", entity)
         if existing is not None:
-            df = df.localCheckpoint(eager=True)
-            touched = [
-                r["b"]
-                for r in df.select(_pk_bucket(pk).alias("b")).distinct().collect()
-            ]
+            bucket_obs = Observation()
+            df = df.observe(
+                bucket_obs, F.collect_set(_pk_bucket(pk)).alias("b")
+            ).localCheckpoint(eager=True)
+            touched = list(bucket_obs.get["b"])
             # the merge reads ONLY the batch's buckets: partition pruning
             # keeps untouched snapshot bytes off this plan
             existing = existing.filter(F.col(bucket).isin(touched)).drop(
@@ -400,24 +468,15 @@ class Pipeline:
             # this plan reads: a dynamic partition overwrite stages its
             # output and swaps the partitions in only at job commit
             df = upsert_last_writer_wins(existing, df, pk, "_ingest_seq")
-        # fold the row-count metric into the write job (Observation):
-        # the count is computed by the tasks that write, not a second job
-        obs = Observation()
-        out = df.drop("_ingest_seq").observe(obs, F.count(F.lit(1)).alias("n"))
         # replace only the batch's partitions; the rest of the snapshot
         # is not read, shuffled, or rewritten
         self.wh.overwrite_partitions(
-            out.withColumn(bucket, _pk_bucket(pk)), "staging", entity, [bucket]
+            df.drop("_ingest_seq").withColumn(bucket, _pk_bucket(pk)),
+            "staging", entity, [bucket],
         )
-        if touched is None:
-            self.metrics.extracted[entity] = obs.get["n"]
-        else:
-            obs.get  # force the Observation so the write job has run
-            # extracted = the full snapshot row count (the merge saw only
-            # the touched buckets): parquet footer metadata, no data scan
-            self.metrics.extracted[entity] = self.wh.read(
-                "staging", entity
-            ).count()
+        # extracted = the full snapshot row count (a merge sees only the
+        # touched buckets), summed from the Parquet footers: no Spark job
+        self.metrics.extracted[entity] = self.wh.row_count("staging", entity)
         self._touched_buckets[entity] = touched
         # entities write DISJOINT path keys, so concurrent updates from
         # the extract thread pool never collide
@@ -462,19 +521,11 @@ class Pipeline:
         )
         if incremental:
             staged = staged.filter(F.col(bucket).isin(touched))
-        typed = ENTITY_TRANSFORMS[entity](staged)
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        typed = typed.observe(obs, F.count(F.lit(1)).alias("n"))
-        self.wh.overwrite_partitions(typed, "transformed", entity, [bucket])
-        if incremental:
-            obs.get  # force the write before the footer-only count
-            self.metrics.transformed[entity] = self.wh.read(
-                "transformed", entity
-            ).count()
-        else:
-            self.metrics.transformed[entity] = obs.get["n"]
+        self.wh.overwrite_partitions(
+            staged.select(*self._columns("transform", entity)),
+            "transformed", entity, [bucket],
+        )
+        self.metrics.transformed[entity] = self.wh.row_count("transformed", entity)
 
     # -- load: incremental append into production ----------------------------
     def run_load(self, entities: list[str] | None = None) -> None:
@@ -498,7 +549,9 @@ class Pipeline:
             src = src.drop(_bucket_col())
             incremental = self.wh.exists("production", entity)
             if incremental:
-                target = self.wh.read("production", entity)
+                target = self.wh.read(
+                    "production", entity, schema=_read_schema("production", entity)
+                )
                 stale = sorted(set(target.columns) - set(src.columns))
                 if stale:
                     # e.g. transaction_year from the year-partitioned
@@ -511,30 +564,15 @@ class Pipeline:
                     )
                 # an append adds files and leaves the ones this plan
                 # listed alone, so the delta needs no lineage barrier
-                delta = incremental_append_antijoin(src, target, pk)
-                self.wh.append(delta, "production", entity)
-                # one read-back count serves both the loaded metric and the
-                # reconciliation target side (was two scans of production)
-                prod_count = self.wh.read("production", entity).count()
-                # the source side is the transformed table, which this
-                # run's transform phase counted after writing it
-                src_count = self.metrics.transformed.get(entity)
-                if src_count is None:  # standalone load
-                    src_count = src.count()
-            else:
-                # first load: production after the append holds exactly
-                # src — one Observation folded into the write yields
-                # loaded, source, and target counts with no extra job.
-                # (An observe node on src/target in the incremental branch
-                # would sit inside the anti-join and block column pruning
-                # of the key-only side.)
-                from pyspark.sql import Observation
-
-                obs = Observation()
-                self.wh.append(
-                    src.observe(obs, F.count(F.lit(1)).alias("n")), "production", entity
-                )
-                prod_count = src_count = int(obs.get["n"])
+                src = incremental_append_antijoin(src, target, pk)
+            self.wh.append(src, "production", entity)
+            # both reconciliation sides are full-table counts from the
+            # Parquet footers: no Spark job. The source side is the
+            # transformed table, which this run's transform counted.
+            prod_count = self.wh.row_count("production", entity)
+            src_count = self.metrics.transformed.get(entity)
+            if src_count is None:  # standalone load
+                src_count = self.wh.row_count("transformed", entity)
             self.metrics.loaded[entity] = prod_count
             self.metrics.reconciliation[entity] = {
                 "source_count": src_count,
@@ -549,21 +587,60 @@ class Pipeline:
             }
 
     def _bucketed(self, layer: str, entity: str) -> DataFrame | None:
-        """The layout guard: ``layer.entity`` read as a DataFrame, None
-        when it does not exist. A table without this build's bucket
-        column (unpartitioned, or bucketed under another width) raises
-        before anything is written: a partition overwrite into it would
-        leave the old rows beside the new ones."""
-        if not self.wh.exists(layer, entity):
+        """The layout guard: ``layer.entity`` read with its declared
+        schema, None when it does not exist. A table whose listing holds
+        anything but this build's bucket directories (unpartitioned, or
+        bucketed under another width) raises before anything is written:
+        a partition overwrite into it would leave the old rows beside the
+        new ones. The check lists the directory over Hadoop FS and the
+        read is schema-pinned, so neither runs a Spark job."""
+        fs, root = hadoop_fs(self.spark, self.wh.path(layer, entity))
+        if not fs.exists(root):
             return None
-        df = self.wh.read(layer, entity)
-        if _bucket_col() not in df.columns:
-            raise ValueError(
-                f"{layer}.{entity} is not partitioned by {_bucket_col()} "
-                "(an older build's layout, or another bucket width): "
-                "rebuild the warehouse from the CSVs with this version"
-            )
-        return df
+        prefix = f"{_bucket_col()}="
+        for st in fs.listStatus(root):
+            name = st.getPath().getName()
+            if not hidden(name) and not (st.isDirectory() and name.startswith(prefix)):
+                raise ValueError(
+                    f"{layer}.{entity} is not partitioned by {_bucket_col()} "
+                    "(an older build's layout, or another bucket width): "
+                    "rebuild the warehouse from the CSVs with this version"
+                )
+        return self.wh.read(layer, entity, schema=_read_schema(layer, entity))
+
+    def _roll_forward_commits(self) -> None:
+        """Finish partition-overwrite commits that a crash interrupted.
+        Spark's dynamic partition overwrite commits by deleting each final
+        partition directory and then renaming ``.spark-staging-<job>/<part>``
+        into its place; a process death between the two leaves the bucket
+        missing and its merged rows in the staging directory. Each staged
+        partition whose final directory is missing is renamed into place,
+        then the leftover directory is deleted. A staged partition whose
+        final directory still exists had not been swapped yet, so the
+        final one holds the bucket's previous rows: it is dropped, and the
+        next extract merges the unlogged batch into that bucket again (a
+        transformed bucket is re-derived by the full pass the flag
+        forces). Runs only under the open-run flag, before extract
+        writes."""
+        Path = self.spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+        for layer in ("staging", "transformed"):
+            for entity in LOAD_ORDER:
+                fs, root = hadoop_fs(self.spark, self.wh.path(layer, entity))
+                if not fs.exists(root):
+                    continue
+                for st in fs.listStatus(root):
+                    if not st.getPath().getName().startswith(".spark-staging-"):
+                        continue
+                    for part in fs.listStatus(st.getPath()):
+                        final = Path(root, part.getPath().getName())
+                        if "=" not in final.getName() or fs.exists(final):
+                            continue
+                        if not fs.rename(part.getPath(), final):
+                            raise IOError(
+                                f"could not roll {part.getPath()} forward "
+                                f"into {final}"
+                            )
+                    fs.delete(st.getPath(), True)
 
     def _run_flag(self):
         """``(fs, path)`` of the open-run flag, ``<warehouse>/_run_marker``:

@@ -10,6 +10,7 @@ bucketed; production is appended unpartitioned).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 LAYERS = ("staging", "transformed", "production")
 
@@ -23,6 +24,14 @@ def hadoop_fs(spark: SparkSession, path: str):
     return p.getFileSystem(sc._jsc.hadoopConfiguration()), p
 
 
+def hidden(name: str) -> bool:
+    """True for a file or directory name that Spark's file listing skips:
+    a leading ``.`` (``.spark-staging-*``, checksum files), or a leading
+    ``_`` without ``=`` (``_temporary``, ``_SUCCESS``; a partition
+    directory such as ``__pk_bucket_1000000=0`` is listed)."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
 class Warehouse:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -33,18 +42,51 @@ class Warehouse:
         return f"{self.root}/{layer}/{table}"
 
     def read(
-        self, layer: str, table: str, merge_schema: bool = False
+        self, layer: str, table: str, merge_schema: bool = False,
+        schema: T.StructType | None = None,
     ) -> DataFrame:
         """``merge_schema=True`` reconciles files written under evolved
         schemas (a daily append that gained a column): the union schema
         is read, pre-evolution rows surface the new column as NULL.
         Off by default — schema merging footer-scans every file, a real
         cost on a 100 TB table, and the common case is a stable schema
-        enforced by the pipeline's validated projections (P1)."""
+        enforced by the pipeline's validated projections (P1).
+
+        ``schema`` pins the read schema, so no Spark job infers it from
+        the files. Partition columns it does not name are still
+        discovered from the directory names and appended."""
         r = self.spark.read
         if merge_schema:
             r = r.option("mergeSchema", "true")
+        if schema is not None:
+            r = r.schema(schema)
         return r.parquet(self.path(layer, table))
+
+    def row_count(self, layer: str, table: str) -> int:
+        """Rows in ``layer.table``, summed from the Parquet footers of its
+        data files on the driver: no Spark job. Skips what Spark's
+        listing skips (:func:`hidden`), so a leftover ``.spark-staging-*``
+        or ``_temporary`` directory is not counted."""
+        sc = self.spark.sparkContext
+        conf = sc._jsc.hadoopConfiguration()
+        parquet = sc._jvm.org.apache.parquet.hadoop
+        fs, root = hadoop_fs(self.spark, self.path(layer, table))
+        n, dirs = 0, [root]
+        while dirs:
+            for st in fs.listStatus(dirs.pop()):
+                if hidden(st.getPath().getName()):
+                    continue
+                if st.isDirectory():
+                    dirs.append(st.getPath())
+                    continue
+                reader = parquet.ParquetFileReader.open(
+                    parquet.util.HadoopInputFile.fromStatus(st, conf)
+                )
+                try:
+                    n += reader.getRecordCount()
+                finally:
+                    reader.close()
+        return n
 
     def exists(self, layer: str, table: str) -> bool:
         """Filesystem probe via the Hadoop FS API (scheme-agnostic: local,

@@ -564,3 +564,161 @@ def test_run_refuses_staging_of_another_bucket_width(spark, tmp_path, monkeypatc
     after = _warehouse_files(pipe)
     assert after == before
     assert all(after[("staging", e)] for e in ("branches", "customers", "loans", "transactions"))
+
+
+def test_interrupted_partition_commit_rolls_forward(spark, tmp_path, monkeypatch):
+    """Spark commits a dynamic partition overwrite by deleting each final
+    partition and then renaming ``.spark-staging-<job>/<part>`` into its
+    place. A crash between the two leaves the bucket only in the staging
+    directory; the next window rolls it forward before extract reads
+    staging, so no staged row is lost."""
+    import os
+    import shutil
+
+    (tmp_path / "in").mkdir()
+    files = _write_files(tmp_path / "in")
+    wh = str(tmp_path / "wh")
+    pipe = Pipeline(spark, wh)
+    pipe.run_full(files)
+    files = _deliver(files, "customers", tmp_path / "in" / "customers_2.csv", CUST_HEADER
+                     + "4,QT0002,four,x,1990-05-05,F,a@x.com,1,addr,2023-03-03\n")
+    root = tmp_path / "wh" / "staging" / "customers"
+    part = f"{_bucket_col()}=0"  # every customer id is in bucket 0
+    orig = pipe.wh.overwrite_partitions
+
+    def commit_interrupted(df, layer, table, *a, **k):
+        orig(df, layer, table, *a, **k)
+        if (layer, table) == ("staging", "customers"):
+            (root / ".spark-staging-x").mkdir()
+            shutil.move(str(root / part), str(root / ".spark-staging-x" / part))
+            raise RuntimeError("simulated crash")
+
+    monkeypatch.setattr(pipe.wh, "overwrite_partitions", commit_interrupted)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        pipe.run_full(files)
+    monkeypatch.undo()
+
+    files = _deliver(files, "customers", tmp_path / "in" / "customers_3.csv", CUST_HEADER
+                     + "5,QT0001,five,x,1990-05-05,F,g@x.com,1,addr,2023-03-03\n")
+    healer = Pipeline(spark, wh)
+    s = healer.run_full(files)
+    assert _prod_ids(healer, "customers", "staging") == {"1", "2", "3", "4", "5"}
+    assert s["status"] == "SUCCESS"
+    assert all(r["synced"] for r in healer.metrics.reconciliation.values())
+    assert _prod_ids(healer, "customers") == {"1", "2", "3", "4", "5"}
+    assert not any(n.startswith(".spark-staging") for n in os.listdir(root))
+    assert healer.run_full(files)["no_new_files"] is True
+
+
+@pytest.mark.parametrize("entity", ["branches", "customers", "loans", "transactions"])
+def test_transform_output_matches_declared_schema(spark, entity):
+    """Every warehouse read pins the declared schema instead of inferring
+    it, so each transform's output must be exactly TRANSFORMED_SCHEMAS
+    plus the bucket column, name for name and type for type."""
+    from pyspark.sql import types as T
+
+    from python_etl_pipeline_spark.pipeline import ENTITY_TRANSFORMS
+    from python_etl_pipeline_spark.schemas import TRANSFORMED_SCHEMAS, staging_schema
+
+    bucket = T.StructField(_bucket_col(), T.LongType())
+    empty = spark.createDataFrame([], T.StructType(staging_schema(entity).fields + [bucket]))
+    got = [(f.name, f.dataType) for f in ENTITY_TRANSFORMS[entity](empty).schema]
+    want = [(f.name, f.dataType) for f in TRANSFORMED_SCHEMAS[entity].fields + [bucket]]
+    assert got == want
+
+
+def _assert_counts_are_table_counts(pipe, delivered):
+    """The run's metrics, footer-summed, equal a full count of each table."""
+    def count(layer, e):
+        return pipe.wh.read(layer, e).count()
+
+    for e in delivered:
+        assert pipe.metrics.extracted[e] == count("staging", e), e
+    assert set(pipe.metrics.loaded) == set(pipe.metrics.transformed)
+    for e, n in pipe.metrics.transformed.items():
+        assert n == count("transformed", e), e
+        prod = count("production", e)
+        rec = pipe.metrics.reconciliation[e]
+        assert pipe.metrics.loaded[e] == rec["target_count"] == prod, e
+        assert rec["source_count"] == n, e
+
+
+def test_footer_counts_equal_table_counts(spark, tmp_path, monkeypatch):
+    """After incremental windows and after a heal, every metric the run
+    reports is the full table's row count."""
+    (tmp_path / "in").mkdir()
+    files = _write_files(tmp_path / "in")
+    wh = str(tmp_path / "wh")
+    pipe = Pipeline(spark, wh)
+    pipe.run_full(files)
+    _assert_counts_are_table_counts(pipe, list(files))
+    files = _deliver(files, "customers", tmp_path / "in" / "customers_2.csv", CUST_HEADER
+                     + "4,QT0002,four,x,1990-05-05,F,a@x.com,1,addr,2023-03-03\n"
+                     + "2,QT0002,vik,changed,1945-01-01,male,v@x.com,1,addr,2019-06-01\n"
+                     + "2000001,QT0002,far,x,1990-05-05,F,f@x.com,1,addr,2023-03-03\n")
+    files = _deliver(files, "transactions", tmp_path / "in" / "transactions_2.csv",
+                     TRANSACTIONS.splitlines()[0] + "\n102,2,2024-02-01,deposit,10,10,no\n")
+    pipe.run_full(files)
+    _assert_counts_are_table_counts(pipe, ["customers", "transactions"])
+
+    def crash(*_a, **_k):
+        raise RuntimeError("simulated crash")
+
+    files = _deliver(files, "loans", tmp_path / "in" / "loans_2.csv",
+                     LOANS.splitlines()[0] + "\n13,4,car,1000,9,01-03-22,01-03-24,Active\n")
+    monkeypatch.setattr(pipe, "run_transform", crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        pipe.run_full(files)
+    monkeypatch.undo()
+    files = _deliver(files, "customers", tmp_path / "in" / "customers_3.csv", CUST_HEADER
+                     + "5,QT0001,five,x,1990-05-05,F,g@x.com,1,addr,2023-03-03\n")
+    healer = Pipeline(spark, wh)
+    s = healer.run_full(files)
+    assert s["skipped_entities"] == [] and s["status"] == "SUCCESS"
+    # loans_2 was extracted and logged by the crashed run
+    _assert_counts_are_table_counts(healer, ["customers"])
+    assert set(healer.metrics.loaded) == {"branches", "customers", "loans", "transactions"}
+
+
+def _max_job_id(spark):
+    ids = spark.sparkContext._jsc.statusTracker().getJobIdsForGroup(None)
+    return spark.sparkContext._jvm.java.util.Arrays.stream(ids).max().orElse(-1)
+
+
+def test_row_count_skips_what_spark_listing_skips(spark, tmp_path):
+    """A parquet file left under ``.spark-staging-*`` or ``_temporary`` is
+    not part of the table: Spark's reads skip it, and so does the footer
+    count."""
+    import os
+    import shutil
+
+    (tmp_path / "in").mkdir()
+    pipe = Pipeline(spark, str(tmp_path / "wh"))
+    pipe.run_full(_write_files(tmp_path / "in"))
+    root = pipe.wh.path("staging", "customers")
+    data = next(os.path.join(d, n) for d, _s, ns in os.walk(root)
+                for n in ns if n.endswith(".parquet"))
+    for leftover in (f".spark-staging-x/{_bucket_col()}=0", "_temporary/0"):
+        os.makedirs(os.path.join(root, leftover))
+        shutil.copy(data, os.path.join(root, leftover, "part-leftover.parquet"))
+    assert pipe.wh.read("staging", "customers").count() == 3
+    assert pipe.wh.row_count("staging", "customers") == 3
+
+
+def test_layout_guard_and_footer_count_run_no_spark_job(spark, tmp_path):
+    """The layout guard lists directories and reads with a pinned schema,
+    and the footer count reads Parquet footers on the driver: none of
+    them starts a Spark job."""
+    from python_etl_pipeline_spark.pipeline import _read_schema
+
+    (tmp_path / "in").mkdir()
+    pipe = Pipeline(spark, str(tmp_path / "wh"))
+    pipe.run_full(_write_files(tmp_path / "in"))
+    before = _max_job_id(spark)
+    for e in ("branches", "customers", "loans", "transactions"):
+        for layer in ("staging", "transformed"):
+            assert pipe._bucketed(layer, e) is not None
+        pipe.wh.read("production", e, schema=_read_schema("production", e))
+        for layer in ("staging", "transformed", "production"):
+            assert pipe.wh.row_count(layer, e) > 0
+    assert _max_job_id(spark) == before

@@ -23,7 +23,7 @@ proportional to their size.
 ``--parity`` is the repo's self-serve backstop for the gate-rotation
 staleness policy (r10 verdict #3): it runs ``tools/parity.py`` over
 the ENTIRE registry at sf0.001 as one extra concurrent shard
-(~5 min, bounded by the sweep itself), so between driver rounds the
+(~17 min on a 4 vCPU host, bounded by the sweep itself), so between driver rounds the
 full-registry oracle parity is one command away instead of judge
 goodwill. ``--sf`` (r11 verdict #3) rescales that sweep —
 ``--sf 0.01`` is the driver-equivalent recipe, catching the

@@ -11,8 +11,9 @@ per-phase module mains (main.py:425-461, extract/transform/load
 
 ``schedule`` is the reference's poll loop (main.py:411-419) with the
 overlap lock made structural: one process, one pipeline, runs strictly
-sequentially. For production cadence prefer the Structured Streaming
-ingest (streaming/file_stream.py) under an external scheduler.
+sequentially. For production cadence run ``Pipeline.run_full`` either
+under ``--mode schedule`` or from an external scheduler calling
+``--mode full``; both go through the same ingest log and layers.
 """
 
 from __future__ import annotations

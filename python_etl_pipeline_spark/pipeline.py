@@ -58,7 +58,11 @@ from .operators import (
     pk_filter,
     dedup_keep_last,
 )
-from .plans import upsert_last_writer_wins, incremental_append_antijoin
+from .plans import (
+    upsert_last_writer_wins,
+    incremental_append_antijoin,
+    reconcile_counts,
+)
 from .schemas import (
     LOAD_ORDER,
     PRIMARY_KEYS,
@@ -575,10 +579,7 @@ class Pipeline:
                 src_count = self.wh.row_count("transformed", entity)
             self.metrics.loaded[entity] = prod_count
             self.metrics.reconciliation[entity] = {
-                "source_count": src_count,
-                "target_count": prod_count,
-                "synced": src_count == prod_count,
-                "difference": src_count - prod_count,
+                **reconcile_counts(src_count, prod_count),
                 # the ACTUAL branch taken, so the run report's
                 # "(incremental)"/"(full)" label reflects what happened
                 # rather than inferring it from the dict's presence

@@ -36,10 +36,14 @@ def incremental_append_antijoin(
     return incoming.join(target.select(pk).distinct(), pk, "left_anti")
 
 
-def reconcile_counts(src: DataFrame, dst: DataFrame) -> dict:
+def reconcile_counts(source_count: int, target_count: int) -> dict:
     """I4: row-count reconciliation report (src/load.py:317-360)."""
-    s, d = src.count(), dst.count()
-    return {"source_count": s, "target_count": d, "synced": s == d, "difference": s - d}
+    return {
+        "source_count": source_count,
+        "target_count": target_count,
+        "synced": source_count == target_count,
+        "difference": source_count - target_count,
+    }
 
 
 def merge_agg_state(

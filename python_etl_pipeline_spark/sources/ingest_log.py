@@ -9,10 +9,8 @@ Engine form: a parquet log table keyed by (file_name, file_hash).
 ``new_files_df`` anti-joins the candidate list against the log with no
 driver-side materialization of either side — at 100 TB ingest the log
 is millions of rows, and candidate md5s (which read whole files) are
-computed on executors. ``filter_new_files`` is the list-in/list-out
-convenience wrapper; it collects only the new-path result, bounded by
-the batch being ingested. For streaming cadence the same idempotency
-comes from the file-source checkpoint (streaming/file_stream.py).
+computed on executors. ``mark_processed_batch`` appends one log row
+per ingested file, reusing the hashes ``new_files_df`` computed.
 """
 
 from __future__ import annotations
@@ -91,25 +89,6 @@ class IngestLog:
         hashed = cand.withColumn("file_hash", _md5_udf()(F.col("path")))
         log = self._read().select("file_name", "file_hash")
         return hashed.join(log, ["file_name", "file_hash"], "left_anti")
-
-    def filter_new_files(self, paths: list[str]) -> list[str]:
-        """Return only paths not yet ingested with identical content.
-
-        Same-name-changed-content files pass through (re-process), exactly
-        matching src/extract.py:222-244. The list-in/list-out signature
-        collects only the NEW paths (bounded by the batch the caller is
-        about to ingest) — the log itself stays distributed
-        (:meth:`new_files_df`).
-        """
-        if not paths:
-            return []
-        order = {p: i for i, p in enumerate(paths)}
-        out = [r["path"] for r in self.new_files_df(paths).select("path").collect()]
-        return sorted(out, key=order.__getitem__)
-
-    def mark_processed(self, path: str, record_count: int) -> None:
-        """Append one log row for an ingested file (src/extract.py:246-270)."""
-        self.mark_processed_batch([(path, record_count)])
 
     def mark_processed_batch(
         self,

@@ -2,9 +2,9 @@
 
 staging -> transformed -> production directories, replacing the
 reference's three databases (MySQL stagging/transformed + PostgreSQL
-bank_production). Writers are layout-aware: callers choose the
-partition columns per write (staging and transformed are PK-range
-bucketed; production is appended unpartitioned).
+bank_production). The pipeline writes each layer through one sink:
+staging and transformed through ``overwrite_partitions`` on their
+PK-range buckets, production through an unpartitioned ``append``.
 """
 
 from __future__ import annotations
@@ -110,7 +110,9 @@ class Warehouse:
 
     def overwrite(self, df: DataFrame, layer: str, table: str,
                   partition_by: list[str] | None = None) -> None:
-        """Snapshot rewrite — the upsert sink's terminal step (K1/K2)."""
+        """Whole-table snapshot rewrite (K1/K2). The pipeline's upsert
+        sink is :meth:`overwrite_partitions`, which rewrites only the
+        buckets a batch touches."""
         w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
@@ -144,159 +146,6 @@ class Warehouse:
     def export_csv(self, df: DataFrame, out_dir: str) -> None:
         """K4: CSV export with NULL -> 'NA' (src/transform.py:493-515)."""
         df.na.fill("NA").write.mode("overwrite").option("header", True).csv(out_dir)
-
-    def export_jsonl_shards(
-        self,
-        df: DataFrame,
-        out_dir: str,
-        shard_col: str | None = None,
-        n_shards: int | None = None,
-    ) -> dict:
-        """Training-data delivery: export as JSON-Lines shard files —
-        the format dataloaders (webdataset-style readers, HF
-        datasets, streaming tokenizers) actually consume. If
-        ``shard_col`` is given (e.g. x40's LPT shard assignment) the
-        output is partitioned by it with ONE file per shard (the
-        writer repartitions on the shard key first, so each shard
-        directory holds exactly one sequentially-readable file);
-        ``shard_col`` values must be non-null — a NULL would land in
-        Hive's default partition and corrupt the manifest key, so the
-        writer rejects it up front. Otherwise rows are content-hash
-        sharded into ``n_shards`` buckets (xxhash64 over all columns —
-        deterministic and replay-stable, but fully-duplicate rows
-        collide into one shard; dedupe first if exact balance
-        matters). Returns a manifest {shard_value: row_count} — the
-        sidecar a dataloader uses for length-aware scheduling. At
-        100 TB this is the usual partitioned-write economics: shard
-        count must track data volume, and the per-shard repartition
-        guarantees no tiny-file explosion."""
-        from pyspark.sql import functions as F
-
-        if shard_col is None:
-            if n_shards is not None and n_shards < 1:
-                raise ValueError(f"n_shards must be >= 1, got {n_shards}")
-            n = 16 if n_shards is None else n_shards
-            df = df.withColumn(
-                "shard",
-                F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), n),
-            )
-        else:
-            if df.filter(F.col(shard_col).isNull()).limit(1).count():
-                raise ValueError(
-                    f"shard_col {shard_col!r} contains NULLs — they would "
-                    "land in __HIVE_DEFAULT_PARTITION__ and break the "
-                    "manifest; fill or filter them first"
-                )
-        if shard_col is None:
-            shard_col = "shard"
-        out = df.repartition(shard_col)
-        out.write.mode("overwrite").partitionBy(shard_col).json(out_dir)
-        back = self.spark.read.json(out_dir)
-        manifest = {
-            r["sv"]: r["n"]
-            for r in back.groupBy(F.col(shard_col).alias("sv"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        return manifest
-
-    def read_jsonl_shards(
-        self,
-        in_dir: str,
-        schema=None,
-        shards: list | None = None,
-        verify_manifest: dict | None = None,
-    ) -> DataFrame:
-        """The read side of ``export_jsonl_shards`` — a dataloader's
-        view of the shard store. ``schema`` (DDL string or StructType)
-        skips JSON inference (never infer over 100 TB — the same rule
-        as the CSV staging scans); ``shards`` prunes to specific shard
-        values via PARTITION PRUNING (the directory layout means
-        unrequested shards are never opened — verify with
-        .explain: PartitionFilters); ``verify_manifest`` re-counts the
-        requested shards against the export's manifest sidecar and
-        raises on drift (a torn copy or partial sync shows up as a
-        count mismatch BEFORE training consumes the data)."""
-        from pyspark.sql import functions as F
-
-        reader = self.spark.read
-        if schema is not None:
-            reader = reader.schema(schema)
-        df = reader.json(in_dir)
-        if shards is not None:
-            df = df.filter(F.col("shard").isin(*[F.lit(s) for s in shards]))
-        if verify_manifest is not None:
-            got = {
-                r["sv"]: r["n"]
-                for r in df.groupBy(F.col("shard").alias("sv"))
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-            want = {
-                k: v
-                for k, v in verify_manifest.items()
-                if shards is None or k in set(shards)
-            }
-            if got != want:
-                drift = {
-                    k: (want.get(k), got.get(k))
-                    for k in set(want) | set(got)
-                    if want.get(k) != got.get(k)
-                }
-                raise ValueError(
-                    f"jsonl shard store does not match its manifest "
-                    f"(shard: expected, found): {drift}"
-                )
-        return df
-
-    def publish_staged(
-        self,
-        df: DataFrame,
-        layer: str,
-        table: str,
-        audits: dict,
-        partition_by: list[str] | None = None,
-    ) -> dict:
-        """Write-Audit-Publish: write ``df`` to ``<table>.staging``,
-        run every audit against the STAGED read-back, and only an
-        all-green report atomically swaps staging into the serving
-        path — a failed audit leaves the serving table UNTOUCHED and
-        the staged files in place for inspection (the promotion gate
-        Iceberg calls WAP; the reference's staged upsert,
-        src/load.py:210-286, publishes unconditionally — this adds the
-        audit between its two steps). ``audits`` maps name ->
-        callable(DataFrame) -> truthy; audits run on the read-back, not
-        the input plan, so they verify the BYTES a consumer would see.
-        The swap reuses the crash-safe two-rename helper the streaming
-        state compactors use (a crash window leaves a complete .trash
-        copy, never a half-published table). Returns the audit report
-        plus '__published__'. At 100 TB the staged write is the same
-        cost the publish would be — the audit scan is the only extra,
-        and it is the scan you WANT before 1000 consumers read bad
-        data."""
-        from ..streaming.file_stream import _swap_compacted
-
-        final = self.path(layer, table)
-        staging = final + ".staging"
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(staging)
-        staged = self.spark.read.parquet(staging)
-        report = {name: bool(fn(staged)) for name, fn in audits.items()}
-        published = all(report.values())
-        if published:
-            if self.exists(layer, table):
-                _swap_compacted(self.spark, final, staging)
-            else:
-                fs, p_final = hadoop_fs(self.spark, final)
-                if not fs.rename(p_final.suffix(".staging"), p_final):
-                    raise IOError(
-                        f"publish: rename {staging} -> {final} failed; "
-                        f"staged data intact"
-                    )
-        report["__published__"] = published
-        return report
 
     def compact(
         self,
@@ -531,58 +380,9 @@ def write_bucketed(
     spark.sql(f"ALTER TABLE {db}.{staging} RENAME TO {db}.{table}")
 
 
-def analyze_table(
-    spark: SparkSession, db: str, table: str, columns: list[str] | None = None
-) -> dict:
-    """Collect table- and column-level statistics into the catalog
-    (ANALYZE TABLE ... COMPUTE STATISTICS [FOR COLUMNS ...]).
-
-    The reference's databases do this implicitly (MySQL/PG auto-analyze
-    feeds their planners); on Spark it is an explicit step, and at
-    100 TB it is what turns join planning from file-length guessing
-    into real cost-based decisions: accurate sizeInBytes/rowCount lets
-    the optimizer pick broadcast sides after filters, and column NDVs
-    drive join reordering under spark.sql.cbo.enabled. Run it after
-    each load phase on managed tables (bucketed dims especially — a
-    dim that *is* broadcast-sized should be known to be).
-
-    Returns {"size_bytes": int, "row_count": int | None} parsed back
-    from the catalog so callers (health checks, load-phase metrics)
-    can log what the planner will actually see.
-    """
-    import re
-
-    full = f"{db}.{table}"
-    spark.sql(f"ANALYZE TABLE {full} COMPUTE STATISTICS")
-    if columns:
-        cols = ", ".join(f"`{c}`" for c in columns)
-        spark.sql(f"ANALYZE TABLE {full} COMPUTE STATISTICS FOR COLUMNS {cols}")
-    rows = spark.sql(f"DESCRIBE TABLE EXTENDED {full}").collect()
-    stats_line = next(
-        (r.data_type for r in rows if r.col_name == "Statistics"), ""
-    )
-    m = re.search(r"(\d+) bytes(?:, (\d+) rows)?", stats_line)
-    return {
-        "size_bytes": int(m.group(1)) if m else None,
-        "row_count": int(m.group(2)) if m and m.group(2) else None,
-    }
-
-
 def health_check(spark: SparkSession, db: str) -> dict[str, int]:
     """M4: connectivity/health probe — SHOW TABLES + per-table counts
     (test.py:27-125 reimagined for the catalog)."""
     tables = [r.tableName for r in spark.sql(f"SHOW TABLES IN {db}").collect()]
     return {t: spark.table(f"{db}.{t}").count() for t in tables}
 
-
-def read_evolved(spark: SparkSession, path: str):
-    """Schema-evolution read: one DataFrame over parquet batches whose
-    schemas drifted (columns added over time) — ``mergeSchema`` unions
-    the per-file footers and null-fills missing columns, so old batches
-    stay readable after the pipeline starts writing new fields.
-
-    Merge cost is footer-only (no data scan) but still one footer per
-    file; at 100 TB pin the expected schema with ``.schema(...)`` once
-    known and keep mergeSchema for the discovery/backfill path only.
-    """
-    return spark.read.option("mergeSchema", True).parquet(path)

@@ -7,7 +7,6 @@ from .file_stream import (
     stream_stream_interval_join,
     stream_dedup_within_watermark,
     stream_document_curation,
-    stream_upsert_available_now,
 )
 
 __all__ = [
@@ -17,5 +16,4 @@ __all__ = [
     "stream_stream_interval_join",
     "stream_dedup_within_watermark",
     "stream_document_curation",
-    "stream_upsert_available_now",
 ]

@@ -964,67 +964,6 @@ def stream_datacard_available_now(
     q.awaitTermination()
 
 
-def stream_upsert_available_now(
-    spark: SparkSession,
-    src_dir: str,
-    schema: T.StructType,
-    warehouse_root: str,
-    entity: str,
-    pk: str | list,
-    checkpoint_dir: str,
-    fmt: str = "csv",
-) -> None:
-    """Continuous upsert ingestion: stream files → MERGE into a
-    warehouse table via ``foreachBatch`` (K1/K2 restated for streaming —
-    the reference's ON-DUPLICATE-KEY-UPDATE loader, extract.py:328-357,
-    fed by a file watcher instead of a cron batch).
-
-    Exactly-once story: the checkpoint file-log guarantees each file
-    enters exactly one micro-batch; ``foreachBatch`` may RE-RUN a batch
-    after a crash, so the sink must be idempotent — and last-writer-wins
-    keyed on (pk, batch_id) is: re-merging an already-applied batch
-    rewrites the same winners. At 100 TB the snapshot rewrite becomes a
-    Delta/Iceberg MERGE (retired as untestable here; restoration code
-    in SCALE.md "Delta/Iceberg MERGE") so only touched files rewrite;
-    the foreachBatch seam is identical.
-    """
-    from ..plans.merge import upsert_last_writer_wins
-    from ..sources.warehouse import Warehouse
-
-    from pyspark.sql import functions as F
-
-    wh = Warehouse(spark, warehouse_root)
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        incoming = batch_df.withColumn(
-            "_batch_seq", F.lit(batch_id).cast("long")
-        )
-        if wh.exists("production", entity):
-            existing = wh.read("production", entity).withColumn(
-                "_batch_seq", F.lit(-1).cast("long")
-            )
-            # break lineage before overwriting the directory being read
-            merged = upsert_last_writer_wins(
-                existing, incoming, pk, "_batch_seq"
-            ).localCheckpoint(eager=True)
-        else:
-            merged = incoming
-        wh.overwrite(merged.drop("_batch_seq"), "production", entity)
-
-    reader = spark.readStream.schema(schema)
-    if fmt == "csv":
-        stream = reader.option("header", True).csv(src_dir)
-    else:
-        stream = reader.format(fmt).load(src_dir)
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def running_user_totals(stream: DataFrame, timeout: str = "NoTimeout") -> DataFrame:
     """Custom stateful operator via applyInPandasWithState: per-user
     running event count + value total, emitted on every update.

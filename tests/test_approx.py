@@ -6,9 +6,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from python_etl_pipeline_spark.queries import x6_approx_stats
-from python_etl_pipeline_spark.sources.table_formats import delta_available
-
-import pytest
 
 
 def test_approx_stats_accuracy(spark, sf_dir):
@@ -29,18 +26,3 @@ def test_approx_stats_accuracy(spark, sf_dir):
         assert a["distinct_within_5pct"]
         assert a["median_within_1pct"]
         assert a["p99_within_2pct"]
-
-
-def test_merge_into_retired_no_dead_code():
-    """r10 verdict #5: the untestable Delta MERGE branch was retired
-    (jars cannot be vendored offline). The module must expose only the
-    feature-detection hook — no silently-dead MERGE code path — and
-    the portable upsert must remain the documented replacement."""
-    import python_etl_pipeline_spark.sources.table_formats as tf
-
-    assert not delta_available()  # this environment has no jars
-    assert not hasattr(tf, "merge_into")
-    from python_etl_pipeline_spark.plans.merge import (  # noqa: F401
-        upsert_last_writer_wins,
-    )
-    assert "upsert_last_writer_wins" in (tf.__doc__ or "")

@@ -102,47 +102,6 @@ def test_jdbc_derby_roundtrip_partitioned(spark, tmp_path):
     )
 
 
-def test_analyze_table_feeds_planner_stats(spark, sf_dir):
-    """ANALYZE TABLE lands rowCount/sizeInBytes in the catalog and the
-    optimizer's relation stats pick up the analyzed rowCount — the
-    metadata the CBO sizes joins from."""
-    from python_etl_pipeline_spark.sources.warehouse import analyze_table
-
-    import shutil
-
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    spark.sql("CREATE DATABASE IF NOT EXISTS stats_t")
-    spark.sql("DROP TABLE IF EXISTS stats_t.nation")
-    # a crashed earlier run can leave an orphaned managed-table location
-    loc = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    shutil.rmtree(f"{loc}/stats_t.db/nation", ignore_errors=True)
-    nation.write.mode("overwrite").saveAsTable("stats_t.nation")
-    stats = analyze_table(spark, "stats_t", "nation", columns=["n_nationkey"])
-    assert stats["row_count"] == nation.count()
-    assert stats["size_bytes"] and stats["size_bytes"] > 0
-    # column-level stats (NDV) visible in the catalog
-    desc = {
-        r.info_name: r.info_value
-        for r in spark.sql("DESC EXTENDED stats_t.nation n_nationkey").collect()
-    }
-    assert int(desc["distinct_count"]) > 0
-    # with CBO on, the optimizer's relation stats carry the analyzed
-    # rowCount (without ANALYZE the planner only has file sizes)
-    spark.conf.set("spark.sql.cbo.enabled", "true")
-    try:
-        jstats = (
-            spark.table("stats_t.nation")
-            ._jdf.queryExecution()
-            .optimizedPlan()
-            .stats()
-        )
-        assert jstats.rowCount().get() == nation.count()
-    finally:
-        spark.conf.set("spark.sql.cbo.enabled", "false")
-    spark.sql("DROP TABLE stats_t.nation")
-    spark.sql("DROP DATABASE stats_t")
-
-
 def test_compact_small_files(spark, tmp_path):
     """Compaction collapses an append-accumulated file pile into few
     size-targeted files, atomically, without changing the data."""
@@ -293,20 +252,6 @@ def test_overwrite_partitions_never_flips_session_mode(spark, tmp_path, monkeypa
     assert after == [(0, "a"), (1, "B"), (1, "B2"), (2, "c")]
 
 
-def test_schema_evolution_read(spark, tmp_path):
-    from python_etl_pipeline_spark.sources.warehouse import read_evolved
-
-    p = str(tmp_path / "t")
-    spark.createDataFrame([(1, "a")], "id long, v1 string").write.mode("append").parquet(p)
-    spark.createDataFrame([(2, "b", 9.5)], "id long, v1 string, v2 double").write.mode(
-        "append"
-    ).parquet(p)
-    df = read_evolved(spark, p)
-    assert set(df.columns) == {"id", "v1", "v2"}
-    rows = {r["id"]: (r["v1"], r["v2"]) for r in df.collect()}
-    assert rows == {1: ("a", None), 2: ("b", 9.5)}
-
-
 def test_compact_partitioned_splits_skewed_partition(spark, tmp_path):
     """The partitioned compact path honors target_file_bytes per
     DIRECTORY: a partition ~N times the target splits into ~N files,
@@ -398,192 +343,3 @@ def test_write_bucketed_over_external_table_keeps_backing_data(spark, tmp_path):
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {db}.shared")
         spark.sql(f"DROP DATABASE IF EXISTS {db}")
-
-
-def test_publish_staged_write_audit_publish(spark, tmp_path):
-    """W-A-P promotion gate: a green audit publishes atomically; a red
-    audit leaves the serving table byte-identical and keeps the staged
-    files for inspection."""
-    from pyspark.sql import functions as F
-
-    from python_etl_pipeline_spark.sources.warehouse import Warehouse
-
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    good = spark.range(10).select(
-        F.col("id").alias("pk"), (F.col("id") * 2).alias("v")
-    )
-    audits = {
-        "non_empty": lambda d: d.count() > 0,
-        "pk_unique": lambda d: d.select("pk").distinct().count() == d.count(),
-        "no_null_pk": lambda d: d.filter(F.col("pk").isNull()).count() == 0,
-    }
-    # first publish: no prior table, all audits green
-    rep = wh.publish_staged(good, "production", "t", audits)
-    assert rep["__published__"] and all(
-        v for k, v in rep.items() if k != "__published__"
-    )
-    assert wh.read("production", "t").count() == 10
-
-    # bad candidate: duplicate pk -> audit red -> serving table untouched
-    bad = good.unionByName(good.limit(3))
-    rep2 = wh.publish_staged(bad, "production", "t", audits)
-    assert not rep2["__published__"] and not rep2["pk_unique"]
-    served = wh.read("production", "t")
-    assert served.count() == 10  # old version still served
-    # the rejected candidate is still inspectable at the staging path
-    staged = spark.read.parquet(wh.path("production", "t") + ".staging")
-    assert staged.count() == 13
-
-    # corrected candidate: re-publish over the existing table (swap path)
-    fixed = spark.range(12).select(
-        F.col("id").alias("pk"), (F.col("id") * 3).alias("v")
-    )
-    rep3 = wh.publish_staged(fixed, "production", "t", audits)
-    assert rep3["__published__"]
-    out = wh.read("production", "t")
-    assert out.count() == 12
-    assert out.agg(F.max("v")).first()[0] == 33
-
-
-def test_export_jsonl_shards_roundtrip(spark, sf_dir, tmp_path):
-    """K-series extension: JSONL shard export — one file per shard,
-    lossless read-back, manifest counts match, and explicit shard
-    columns (x40's LPT assignment shape) are honored."""
-    import glob
-
-    from pyspark.sql import functions as F
-
-    from python_etl_pipeline_spark.sources.warehouse import Warehouse
-
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text", "source",
-        (F.col("doc_id") % 4).alias("shard"),
-    )
-    out = str(tmp_path / "jsonl")
-    manifest = wh.export_jsonl_shards(d, out, shard_col="shard")
-    assert sum(manifest.values()) == d.count()
-    assert set(manifest) == {0, 1, 2, 3}
-    # one data file per shard directory (no tiny-file explosion)
-    for s in manifest:
-        files = [
-            f
-            for f in glob.glob(f"{out}/shard={s}/part-*")
-            if not f.endswith(".crc")
-        ]
-        assert len(files) == 1, (s, files)
-    # lossless round-trip (json loses no values on these types)
-    back = spark.read.json(out)
-    a = {
-        (r["doc_id"], r["text"], r["source"], r["shard"])
-        for r in back.collect()
-    }
-    b = {
-        (r["doc_id"], r["text"], r["source"], r["shard"])
-        for r in d.collect()
-    }
-    assert a == b
-
-    # hash-derived sharding path: every row lands in exactly one of n
-    m2 = wh.export_jsonl_shards(
-        d.drop("shard"), str(tmp_path / "jsonl2"), n_shards=8
-    )
-    assert sum(m2.values()) == d.count()
-    assert set(m2) <= set(range(8))
-
-    # r9 advice guards: degenerate shard counts and NULL shard values
-    # fail loudly instead of silently exporting garbage
-    import pytest
-
-    with pytest.raises(ValueError, match="n_shards must be >= 1"):
-        wh.export_jsonl_shards(
-            d.drop("shard"), str(tmp_path / "jsonl3"), n_shards=0
-        )
-    nulled = d.withColumn(
-        "shard", F.when(F.col("doc_id") % 5 != 0, F.col("shard"))
-    )
-    with pytest.raises(ValueError, match="contains NULLs"):
-        wh.export_jsonl_shards(nulled, str(tmp_path / "jsonl4"),
-                               shard_col="shard")
-
-
-def test_read_jsonl_shards_pruning_and_manifest_guard(spark, sf_dir, tmp_path):
-    """The dataloader read side (r11): schema-declared read-back is
-    lossless, shard selection PRUNES partitions at the scan (no
-    unrequested directory is read), and manifest verification catches
-    a torn shard store before a consumer does."""
-    import contextlib
-    import io
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    from python_etl_pipeline_spark.sources.warehouse import Warehouse
-
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text", "source",
-        (F.col("doc_id") % 4).alias("shard"),
-    )
-    out = str(tmp_path / "jsonl")
-    manifest = wh.export_jsonl_shards(d, out, shard_col="shard")
-
-    ddl = "doc_id long, text string, source string"
-    back = wh.read_jsonl_shards(out, schema=ddl, verify_manifest=manifest)
-    assert back.count() == d.count()
-
-    # shard pruning reaches the scan as a PartitionFilter
-    two = wh.read_jsonl_shards(out, schema=ddl, shards=[1, 3])
-    assert two.count() == manifest[1] + manifest[3]
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        two.explain(True)
-    plan = buf.getvalue()
-    assert "PartitionFilters" in plan and "shard" in plan.split(
-        "PartitionFilters", 1
-    )[1].split("]", 1)[0]
-
-    # a torn store (manifest drift) fails loudly, naming the shard
-    bad = dict(manifest)
-    bad[2] = bad[2] + 7
-    with pytest.raises(ValueError, match="does not match its manifest"):
-        wh.read_jsonl_shards(out, schema=ddl, verify_manifest=bad)
-    # pruned verification only checks the requested shards
-    got = wh.read_jsonl_shards(
-        out, schema=ddl, shards=[0], verify_manifest=bad
-    )
-    assert got.count() == manifest[0]
-
-
-def test_publish_staged_gated_by_dq_expectations(spark, tmp_path):
-    """Compose: i19's declarative expectation suites plug straight
-    into the write-audit-publish gate as audits — a violated contract
-    blocks the publish and leaves the serving table untouched."""
-    from pyspark.sql import functions as F
-
-    from python_etl_pipeline_spark.operators.expectations import (
-        Expectation,
-        evaluate,
-    )
-    from python_etl_pipeline_spark.sources.warehouse import Warehouse
-
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    suite = [
-        Expectation("id", "unique"),
-        Expectation("v", "in_range", lo=0, hi=100),
-    ]
-
-    def dq_audit(df):
-        rep = evaluate(df, "t", suite)
-        return rep.agg(F.min("passed")).first()[0] == 1
-
-    good = spark.createDataFrame([(1, 10), (2, 20)], "id long, v long")
-    rep = wh.publish_staged(good, "production", "t", {"dq": dq_audit})
-    assert rep["__published__"] and rep["dq"]
-    assert wh.read("production", "t").count() == 2
-
-    bad = spark.createDataFrame([(1, 10), (1, 999)], "id long, v long")
-    rep2 = wh.publish_staged(bad, "production", "t", {"dq": dq_audit})
-    assert not rep2["__published__"] and not rep2["dq"]
-    # serving table untouched by the failed publish
-    assert wh.read("production", "t").count() == 2

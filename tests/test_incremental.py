@@ -47,7 +47,7 @@ def test_antijoin_append_and_reconcile(spark):
     target = spark.createDataFrame([(0,), (1,)], ["pk"])
     appended = incremental_append_antijoin(incoming, target, "pk")
     assert sorted(r["pk"] for r in appended.collect()) == [2, 3, 4]
-    rep = reconcile_counts(incoming, target.unionByName(appended))
+    rep = reconcile_counts(incoming.count(), target.unionByName(appended).count())
     assert rep["synced"] and rep["difference"] == 0
 
 
@@ -56,13 +56,18 @@ def test_ingest_log_idempotency(spark, tmp_path):
     f.write_text("customer_id,name\n1,a\n2,b\n")
     log = IngestLog(spark, str(tmp_path / "_ingest_log"))
 
-    assert log.filter_new_files([str(f)]) == [str(f)]
-    log.mark_processed(str(f), record_count=2)
+    def new_files():  # path -> md5, as the pipeline's extract reads them
+        return {r["path"]: r["file_hash"]
+                for r in log.new_files_df([str(f)]).collect()}
+
+    new = new_files()
+    assert list(new) == [str(f)]
+    log.mark_processed_batch([(str(f), 2)], hashes=new)
     # identical re-delivery -> skipped
-    assert log.filter_new_files([str(f)]) == []
+    assert new_files() == {}
     # same name, changed content -> re-processed
     f.write_text("customer_id,name\n1,a\n2,b\n3,c\n")
-    assert log.filter_new_files([str(f)]) == [str(f)]
+    assert list(new_files()) == [str(f)]
     summary = log.summary().collect()[0]
     assert summary["n_files"] == 1 and summary["sum_records"] == 2
 
@@ -79,7 +84,7 @@ def test_ingest_log_batch_path_never_collects_log(spark, tmp_path):
     f = tmp_path / "a.csv"
     f.write_text("x\n1\n")
     log = IngestLog(spark, str(tmp_path / "_ingest_log"))
-    log.mark_processed(str(f), record_count=1)
+    log.mark_processed_batch([(str(f), 1)])
 
     def _banned(self, *a, **k):
         raise AssertionError("driver-side materialization while building the anti-join")

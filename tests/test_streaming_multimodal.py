@@ -66,33 +66,6 @@ def test_decode_real_is_stubbed():
         decode_real(b"bytes")
 
 
-def test_stream_upsert_foreachbatch(spark, tmp_path):
-    """Streaming K1/K2: files stream into a warehouse MERGE via
-    foreachBatch — later files update existing keys, re-runs are no-ops."""
-    from python_etl_pipeline_spark.streaming import stream_upsert_available_now
-
-    src = tmp_path / "src"
-    src.mkdir()
-    wh, ckpt = str(tmp_path / "wh"), str(tmp_path / "ckpt")
-    (src / "a.csv").write_text("id,val\n1,x\n2,y\n3,z\n")
-
-    stream_upsert_available_now(spark, str(src), SCHEMA, wh, "items", "id", ckpt)
-    prod = spark.read.parquet(f"{wh}/production/items")
-    assert prod.count() == 3
-
-    # second file updates key 3, adds 4 — upsert, not append
-    (src / "b.csv").write_text("id,val\n3,Z2\n4,w\n")
-    stream_upsert_available_now(spark, str(src), SCHEMA, wh, "items", "id", ckpt)
-    prod = spark.read.parquet(f"{wh}/production/items")
-    assert prod.count() == 4
-    got = {r["id"]: r["val"] for r in prod.collect()}
-    assert got["3"] == "Z2" and got["1"] == "x" and got["4"] == "w"
-
-    # no new files: idempotent no-op (checkpoint file-log is the tracker)
-    stream_upsert_available_now(spark, str(src), SCHEMA, wh, "items", "id", ckpt)
-    assert spark.read.parquet(f"{wh}/production/items").count() == 4
-
-
 def test_stream_upsert_batch_rerun_idempotent(spark, tmp_path):
     """foreachBatch may re-deliver a batch after a crash; the merge keyed
     on (pk, batch_id) must make the re-run a no-op, including when newer

@@ -354,16 +354,16 @@ class Pipeline:
         scheduling/IO latency; the cluster's task scheduler interleaves
         the stages. Results land in per-entity dict slots (thread-safe).
 
-        The ingest log is consulted ONCE for the whole batch (one
-        anti-join job over every entity's candidate files, executor-side
-        md5s) and appended ONCE after all entities land — not per entity.
-        Per-entity log jobs were pure scheduling overhead (5 anti-joins +
-        5 appends for one batch), and the batched append reuses the
-        hashes the anti-join already computed, so no file is read twice
-        for hashing. Failure semantics: if any entity fails, NOTHING is
-        logged, and the next run re-ingests the whole batch — safe, the
-        staging write is an idempotent overwrite. A batch with new files
-        opens the run flag before any staging write (``run_full``).
+        The ingest log is consulted ONCE for the whole batch and appended
+        ONCE after all entities land, both on the driver: the check stats
+        every candidate, hashes only those whose stat the log does not
+        vouch for, and returns a local frame; the mark writes one Parquet
+        file with the check's hashes. Neither starts a Spark job, so a
+        window with no new file runs none. Failure semantics: if any
+        entity fails, NOTHING is logged, and the next run re-ingests the
+        whole batch — safe, the staging write is an idempotent overwrite.
+        A batch with new files opens the run flag before any staging
+        write (``run_full``).
 
         Each log row carries the file's REAL raw record count (the
         reference tracker stores rows-per-file, extract.py:246-270, and

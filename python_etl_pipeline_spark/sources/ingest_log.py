@@ -5,119 +5,169 @@ SURVEY.md §2.1 S4 / §2.9 I1: the reference tracks (file_name, md5) in an
 files already ingested with unchanged content; changed content
 re-processes.
 
-Engine form: a parquet log table keyed by (file_name, file_hash).
-``new_files_df`` anti-joins the candidate list against the log with no
-driver-side materialization of either side — at 100 TB ingest the log
-is millions of rows, and candidate md5s (which read whole files) are
-computed on executors. ``mark_processed_batch`` appends one log row
-per ingested file, reusing the hashes ``new_files_df`` computed.
+Engine form: a Parquet log directory keyed by (file_name, file_hash),
+read and written on the driver with pyarrow. A window's check and mark
+are metadata-sized (a few dozen candidate files, a few log rows), and
+the candidates are local files the driver can ``open``, so neither
+starts a Spark job or a Python worker.
+
+``new_files_df`` stats every candidate, reads only the log rows of the
+candidates' names, and hashes a candidate unless a logged row pins its
+stat (same name, size and mtime, logged while the mtime was already
+older than the racy margin). A candidate is offered iff its
+(file_name, md5) is not logged. ``mark_processed_batch`` appends one
+Parquet file per batch, written under a hidden name and renamed into
+place, so a reader never sees a partial file and an interrupted mark
+leaves only a hidden file that every reader skips. ``summary`` stays a
+Spark read.
 """
 
 from __future__ import annotations
 
 import os
-from datetime import datetime, timezone
-from pathlib import Path
+import threading
+import time
+import uuid
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as pads
+import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..functions.cleansing import file_md5
-from .warehouse import hadoop_fs
-
-def _md5_udf():
-    """Executor-side streaming file MD5 (same algorithm as
-    functions.cleansing.file_md5, F15). One invocation per candidate
-    FILE — IO-bound, so it runs where the data lives; never a per-row
-    hot path."""
-    from pyspark.sql import functions as F
-
-    return F.udf(lambda p: file_md5(p), T.StringType())
-
 
 LOG_SCHEMA = T.StructType([
     T.StructField("file_name", T.StringType(), False),
     T.StructField("file_hash", T.StringType(), False),
     T.StructField("file_size_mb", T.DoubleType(), True),
     T.StructField("record_count", T.LongType(), True),
+    # the time the check took the file's stat, before hashing it
     T.StructField("processed_at", T.TimestampType(), True),
+    # null in rows written by earlier builds: such files are always hashed
+    T.StructField("file_mtime_ns", T.LongType(), True),
 ])
+# processed_at as timestamp("us", tz="UTC"), which Spark reads as TimestampType
+_ARROW_SCHEMA = to_arrow_schema(LOG_SCHEMA)
+
+_CANDIDATES = pa.schema([
+    ("path", pa.string()), ("file_name", pa.string()), ("file_hash", pa.string()),
+])
+
+# git's "racily clean" rule: a logged stat vouches for the content only
+# if the mtime was older than the stat's own time by more than the
+# filesystem's mtime granularity. A same-size rewrite within that
+# window can keep the mtime, so such a row never skips the hash. 2 s
+# covers the coarsest common granularity (FAT); ext3 and HFS+ stamp
+# whole seconds, and ext4/xfs/tmpfs stamp from a clock tick of <= 10 ms.
+RACY_MARGIN_NS = 2_000_000_000
+
+_MB = 1024 * 1024
 
 
 class IngestLog:
     """Parquet-backed ingest log with the reference's skip semantics."""
 
     def __init__(self, spark: SparkSession, log_dir: str):
-        import threading
-
         self.spark = spark
         self.log_dir = log_dir
-        # serializes appends: concurrent jobs writing one directory share
-        # the committer's _temporary staging path and can collide
+        # serializes batch commits into the log directory
         self._write_lock = threading.Lock()
+        # path -> (size, mtime_ns, stat time ns, md5) of the files the
+        # last check hashed, which the mark logs with their hash
+        self._checked: dict[str, tuple[int, int, int, str]] = {}
 
-    def _exists(self) -> bool:
-        fs, p = hadoop_fs(self.spark, self.log_dir)
-        return bool(fs.exists(p))
-
-    def _read(self):
-        # Probe the filesystem instead of catching read errors: a missing
-        # log is first-run (empty frame), but a corrupt or unreadable log
-        # fails loudly — and spark.read on a nonexistent path logs a noisy
-        # FileStreamSink WARN stack trace we'd rather never trigger.
-        if not self._exists():
-            return self.spark.createDataFrame([], LOG_SCHEMA)
-        return self.spark.read.schema(LOG_SCHEMA).parquet(self.log_dir)
+    def _logged(self, names: list[str]) -> pa.Table:
+        """The log rows of ``names``; hidden (``.``/``_``) files skipped,
+        as Spark skips them."""
+        if not os.path.isdir(self.log_dir):
+            return _ARROW_SCHEMA.empty_table()
+        return pads.dataset(
+            self.log_dir, format="parquet", schema=_ARROW_SCHEMA,
+            ignore_prefixes=[".", "_"],
+        ).to_table(
+            columns=["file_name", "file_hash", "file_size_mb", "processed_at", "file_mtime_ns"],
+            filter=pads.field("file_name").isin(names),
+        )
 
     def new_files_df(self, paths: list[str]):
-        """(path, file_name, file_hash) for candidates NOT yet ingested
-        with identical content — a left-anti join of the candidate list
-        against the log, entirely distributed: the log is never
-        collected into driver memory (at 100 TB ingest the log is
-        millions of rows), and each candidate's md5 is computed on an
-        executor (one task row per FILE — the hash must read the whole
-        file, so this is IO-bound work that belongs on the cluster, not
-        the driver). The log side of the join is small relative to data
-        but unbounded over time; the anti-join broadcasts the candidate
-        side when it is the smaller one."""
-        from pyspark.sql import functions as F
-
-        cand = self.spark.createDataFrame(
-            [(p, os.path.basename(p)) for p in paths],
-            "path string, file_name string",
-        )
-        hashed = cand.withColumn("file_hash", _md5_udf()(F.col("path")))
-        log = self._read().select("file_name", "file_hash")
-        return hashed.join(log, ["file_name", "file_hash"], "left_anti")
+        """(path, file_name, file_hash) for the candidates NOT yet
+        ingested with identical content, as a local DataFrame built on
+        the driver. A candidate whose stat a logged row pins (see
+        ``RACY_MARGIN_NS``) is skipped unhashed; every other one is
+        hashed and offered iff its (file_name, md5) is not logged."""
+        stat_ns = time.time_ns()  # before any stat: the racy rule's reference
+        stats = {p: os.stat(p) for p in paths}
+        logged = self._logged(sorted({os.path.basename(p) for p in paths}))
+        processed_ns = pc.multiply(
+            pc.cast(logged["processed_at"], pa.int64()), 1000
+        ).to_pylist()
+        pinned, logged_hashes = set(), set()
+        for name, h, mb, mtime, at in zip(
+            logged["file_name"].to_pylist(), logged["file_hash"].to_pylist(),
+            logged["file_size_mb"].to_pylist(), logged["file_mtime_ns"].to_pylist(),
+            processed_ns,
+        ):
+            logged_hashes.add((name, h))
+            if None not in (mb, mtime, at) and mtime < at - RACY_MARGIN_NS:
+                # file_size_mb * 2**20 is exact: the size was divided by it
+                pinned.add((name, int(mb * _MB), mtime))
+        self._checked = {}
+        for p, st in stats.items():
+            name = os.path.basename(p)
+            if (name, st.st_size, st.st_mtime_ns) in pinned:
+                continue
+            h = file_md5(p)
+            if (name, h) not in logged_hashes:
+                self._checked[p] = (st.st_size, st.st_mtime_ns, stat_ns, h)
+        return self.spark.createDataFrame(pa.table({
+            "path": list(self._checked),
+            "file_name": [os.path.basename(p) for p in self._checked],
+            "file_hash": [c[3] for c in self._checked.values()],
+        }, schema=_CANDIDATES))
 
     def mark_processed_batch(
         self,
         entries: list[tuple[str, int]],
         hashes: dict[str, str] | None = None,
     ) -> None:
-        """Append log rows for a batch of ingested files in one write —
-        one tiny Spark job per batch, not per file. Pass ``hashes``
-        (path -> md5) when the caller already computed them (e.g. from
-        :meth:`new_files_df`): hashing means reading the whole file, so
-        re-hashing here would double the ingest's IO."""
+        """Append log rows for a batch of ingested files as one Parquet
+        file. A file the last :meth:`new_files_df` hashed is logged with
+        that check's stat and hash, so nothing is read twice; ``hashes``
+        (path -> md5, as the check returned them) is only checked against
+        it. Any other file is stat'ed and hashed here."""
         if not entries:
             return
-        now = datetime.now(timezone.utc).replace(tzinfo=None)
         hashes = hashes or {}
         rows = []
         for path, record_count in entries:
-            p = Path(path)
-            rows.append(
-                (p.name, hashes.get(path) or file_md5(p),
-                 p.stat().st_size / (1024 * 1024), record_count, now)
-            )
-        # repartition(1), NOT coalesce(1): coalescing a 32-slice local
-        # relation into one task walks every empty slice sequentially
-        # (~4s); a shuffle to 1 partition is ~10x cheaper here.
+            seen = self._checked.get(path)
+            if seen is None or hashes.get(path, seen[3]) != seen[3]:
+                at = time.time_ns()  # before the stat, as in the check
+                st = os.stat(path)
+                seen = (st.st_size, st.st_mtime_ns, at, file_md5(path))
+            size, mtime, at, h = seen
+            rows.append({
+                "file_name": os.path.basename(path), "file_hash": h,
+                "file_size_mb": size / _MB, "record_count": record_count,
+                "processed_at": at // 1000, "file_mtime_ns": mtime,
+            })
+        table = pa.Table.from_pylist(rows, schema=_ARROW_SCHEMA)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(self.log_dir, f".{name}.tmp")
+        os.makedirs(self.log_dir, exist_ok=True)
+        pq.write_table(table, tmp)
         with self._write_lock:
-            self.spark.createDataFrame(rows, LOG_SCHEMA).repartition(1).write.mode(
-                "append"
-            ).parquet(self.log_dir)
+            os.rename(tmp, os.path.join(self.log_dir, name))
+
+    def _read(self):
+        # a missing log is first-run (an empty frame); a corrupt or
+        # unreadable log fails the read loudly
+        if not os.path.isdir(self.log_dir):
+            return self.spark.createDataFrame(_ARROW_SCHEMA.empty_table())
+        return self.spark.read.schema(LOG_SCHEMA).parquet(self.log_dir)
 
     def summary(self):
         """A3-style multi-agg over the log (src/extract.py:573-580)."""

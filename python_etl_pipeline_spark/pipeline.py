@@ -355,10 +355,9 @@ class Pipeline:
         the stages. Results land in per-entity dict slots (thread-safe).
 
         The ingest log is consulted ONCE for the whole batch and appended
-        ONCE after all entities land, both on the driver: the check stats
-        every candidate, hashes only those whose stat the log does not
-        vouch for, and returns a local frame; the mark writes one Parquet
-        file with the check's hashes. Neither starts a Spark job, so a
+        ONCE after all entities land, both on the driver: the check hashes
+        every candidate and returns a local frame of the new ones; the
+        mark writes one Parquet file with the check's hashes. Neither starts a Spark job, so a
         window with no new file runs none. Failure semantics: if any
         entity fails, NOTHING is logged, and the next run re-ingests the
         whole batch — safe, the staging write is an idempotent overwrite.

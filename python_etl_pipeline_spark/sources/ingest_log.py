@@ -11,26 +11,21 @@ are metadata-sized (a few dozen candidate files, a few log rows), and
 the candidates are local files the driver can ``open``, so neither
 starts a Spark job or a Python worker.
 
-``new_files_df`` stats every candidate, reads only the log rows of the
-candidates' names, and hashes a candidate unless a logged row pins its
-stat (same name, size and mtime, logged while the mtime was already
-older than the racy margin). A candidate is offered iff its
-(file_name, md5) is not logged. ``mark_processed_batch`` appends one
-Parquet file per batch, written under a hidden name and renamed into
-place, so a reader never sees a partial file and an interrupted mark
-leaves only a hidden file that every reader skips. ``summary`` stays a
-Spark read.
+``new_files_df`` hashes every candidate, reads only the log rows of the
+candidates' names, and offers a candidate iff its (file_name, md5) is
+not logged. ``mark_processed_batch`` appends one Parquet file per
+batch, written under a hidden name and renamed into place, so a reader
+never sees a partial file and an interrupted mark leaves only a hidden
+file that every reader skips. ``summary`` stays a Spark read.
 """
 
 from __future__ import annotations
 
 import os
-import threading
 import time
 import uuid
 
 import pyarrow as pa
-import pyarrow.compute as pc
 import pyarrow.dataset as pads
 import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
@@ -44,10 +39,7 @@ LOG_SCHEMA = T.StructType([
     T.StructField("file_hash", T.StringType(), False),
     T.StructField("file_size_mb", T.DoubleType(), True),
     T.StructField("record_count", T.LongType(), True),
-    # the time the check took the file's stat, before hashing it
     T.StructField("processed_at", T.TimestampType(), True),
-    # null in rows written by earlier builds: such files are always hashed
-    T.StructField("file_mtime_ns", T.LongType(), True),
 ])
 # processed_at as timestamp("us", tz="UTC"), which Spark reads as TimestampType
 _ARROW_SCHEMA = to_arrow_schema(LOG_SCHEMA)
@@ -56,16 +48,6 @@ _CANDIDATES = pa.schema([
     ("path", pa.string()), ("file_name", pa.string()), ("file_hash", pa.string()),
 ])
 
-# git's "racily clean" rule: a logged stat vouches for the content only
-# if the mtime was older than the stat's own time by more than the
-# filesystem's mtime granularity. A same-size rewrite within that
-# window can keep the mtime, so such a row never skips the hash. 2 s
-# covers the coarsest common granularity (FAT); ext3 and HFS+ stamp
-# whole seconds, and ext4/xfs/tmpfs stamp from a clock tick of <= 10 ms.
-RACY_MARGIN_NS = 2_000_000_000
-
-_MB = 1024 * 1024
-
 
 class IngestLog:
     """Parquet-backed ingest log with the reference's skip semantics."""
@@ -73,60 +55,32 @@ class IngestLog:
     def __init__(self, spark: SparkSession, log_dir: str):
         self.spark = spark
         self.log_dir = log_dir
-        # serializes batch commits into the log directory
-        self._write_lock = threading.Lock()
-        # path -> (size, mtime_ns, stat time ns, md5) of the files the
-        # last check hashed, which the mark logs with their hash
-        self._checked: dict[str, tuple[int, int, int, str]] = {}
 
-    def _logged(self, names: list[str]) -> pa.Table:
-        """The log rows of ``names``; hidden (``.``/``_``) files skipped,
-        as Spark skips them."""
+    def _logged(self, names: list[str]) -> set[tuple[str, str]]:
+        """The logged (file_name, file_hash) pairs of ``names``; hidden
+        (``.``/``_``) files skipped, as Spark skips them."""
         if not os.path.isdir(self.log_dir):
-            return _ARROW_SCHEMA.empty_table()
-        return pads.dataset(
+            return set()
+        t = pads.dataset(
             self.log_dir, format="parquet", schema=_ARROW_SCHEMA,
             ignore_prefixes=[".", "_"],
         ).to_table(
-            columns=["file_name", "file_hash", "file_size_mb", "processed_at", "file_mtime_ns"],
+            columns=["file_name", "file_hash"],
             filter=pads.field("file_name").isin(names),
         )
+        return set(zip(t["file_name"].to_pylist(), t["file_hash"].to_pylist()))
 
     def new_files_df(self, paths: list[str]):
         """(path, file_name, file_hash) for the candidates NOT yet
         ingested with identical content, as a local DataFrame built on
-        the driver. A candidate whose stat a logged row pins (see
-        ``RACY_MARGIN_NS``) is skipped unhashed; every other one is
-        hashed and offered iff its (file_name, md5) is not logged."""
-        stat_ns = time.time_ns()  # before any stat: the racy rule's reference
-        stats = {p: os.stat(p) for p in paths}
+        the driver: every candidate is hashed and offered iff its
+        (file_name, md5) is not logged."""
         logged = self._logged(sorted({os.path.basename(p) for p in paths}))
-        processed_ns = pc.multiply(
-            pc.cast(logged["processed_at"], pa.int64()), 1000
-        ).to_pylist()
-        pinned, logged_hashes = set(), set()
-        for name, h, mb, mtime, at in zip(
-            logged["file_name"].to_pylist(), logged["file_hash"].to_pylist(),
-            logged["file_size_mb"].to_pylist(), logged["file_mtime_ns"].to_pylist(),
-            processed_ns,
-        ):
-            logged_hashes.add((name, h))
-            if None not in (mb, mtime, at) and mtime < at - RACY_MARGIN_NS:
-                # file_size_mb * 2**20 is exact: the size was divided by it
-                pinned.add((name, int(mb * _MB), mtime))
-        self._checked = {}
-        for p, st in stats.items():
-            name = os.path.basename(p)
-            if (name, st.st_size, st.st_mtime_ns) in pinned:
-                continue
-            h = file_md5(p)
-            if (name, h) not in logged_hashes:
-                self._checked[p] = (st.st_size, st.st_mtime_ns, stat_ns, h)
-        return self.spark.createDataFrame(pa.table({
-            "path": list(self._checked),
-            "file_name": [os.path.basename(p) for p in self._checked],
-            "file_hash": [c[3] for c in self._checked.values()],
-        }, schema=_CANDIDATES))
+        new = [(p, os.path.basename(p), file_md5(p)) for p in paths]
+        new = [c for c in new if c[1:] not in logged]
+        return self.spark.createDataFrame(pa.Table.from_pylist(
+            [dict(zip(_CANDIDATES.names, c)) for c in new], schema=_CANDIDATES,
+        ))
 
     def mark_processed_batch(
         self,
@@ -134,33 +88,28 @@ class IngestLog:
         hashes: dict[str, str] | None = None,
     ) -> None:
         """Append log rows for a batch of ingested files as one Parquet
-        file. A file the last :meth:`new_files_df` hashed is logged with
-        that check's stat and hash, so nothing is read twice; ``hashes``
-        (path -> md5, as the check returned them) is only checked against
-        it. Any other file is stat'ed and hashed here."""
+        file. Pass ``hashes`` (path -> md5) when the caller already
+        computed them (e.g. from :meth:`new_files_df`): hashing means
+        reading the whole file, so re-hashing here would double the
+        ingest's IO. A path missing from ``hashes`` is hashed here."""
         if not entries:
             return
+        now_us = time.time_ns() // 1000
         hashes = hashes or {}
-        rows = []
-        for path, record_count in entries:
-            seen = self._checked.get(path)
-            if seen is None or hashes.get(path, seen[3]) != seen[3]:
-                at = time.time_ns()  # before the stat, as in the check
-                st = os.stat(path)
-                seen = (st.st_size, st.st_mtime_ns, at, file_md5(path))
-            size, mtime, at, h = seen
-            rows.append({
-                "file_name": os.path.basename(path), "file_hash": h,
-                "file_size_mb": size / _MB, "record_count": record_count,
-                "processed_at": at // 1000, "file_mtime_ns": mtime,
-            })
-        table = pa.Table.from_pylist(rows, schema=_ARROW_SCHEMA)
+        table = pa.Table.from_pylist([
+            {"file_name": os.path.basename(path),
+             "file_hash": hashes.get(path) or file_md5(path),
+             "file_size_mb": os.stat(path).st_size / (1024 * 1024),
+             "record_count": record_count, "processed_at": now_us}
+            for path, record_count in entries
+        ], schema=_ARROW_SCHEMA)
+        # a uuid name per batch, so concurrent marks never collide, and
+        # the rename publishes the whole file at once
         name = f"part-{uuid.uuid4().hex}.parquet"
         tmp = os.path.join(self.log_dir, f".{name}.tmp")
         os.makedirs(self.log_dir, exist_ok=True)
         pq.write_table(table, tmp)
-        with self._write_lock:
-            os.rename(tmp, os.path.join(self.log_dir, name))
+        os.rename(tmp, os.path.join(self.log_dir, name))
 
     def _read(self):
         # a missing log is first-run (an empty frame); a corrupt or

@@ -116,100 +116,24 @@ def _check_and_mark(log, path) -> list[str]:
     return [r["path"] for r in rows]
 
 
-def _backdate(path, seconds=60) -> int:
-    """Set ``path``'s mtime ``seconds`` into the past, well beyond the
-    racy margin; returns the new mtime in ns."""
-    import os
-    import time
-
-    mtime = time.time_ns() - seconds * 10**9
-    os.utime(path, ns=(mtime, mtime))
-    return mtime
-
-
-def test_ingest_log_skips_unchanged_stat_unhashed(spark, tmp_path, monkeypatch):
-    f = tmp_path / "customers_1.csv"
-    f.write_text("customer_id\n1\n")
-    _backdate(f)
-    log = IngestLog(spark, str(tmp_path / "_ingest_log"))
-    calls = _count_md5(monkeypatch)
-    assert _check_and_mark(log, f) == [str(f)] and len(calls) == 1
-    assert _check_and_mark(log, f) == []
-    assert len(calls) == 1  # the logged stat vouched for the content
-
-
-def test_ingest_log_resent_identical_bytes_hashed_once(spark, tmp_path, monkeypatch):
-    f = tmp_path / "customers_1.csv"
-    f.write_text("customer_id\n1\n")
-    _backdate(f)
-    log = IngestLog(spark, str(tmp_path / "_ingest_log"))
-    _check_and_mark(log, f)
-    calls = _count_md5(monkeypatch)
-    f.write_bytes(f.read_bytes())  # a fresh mtime, the same content
-    assert _check_and_mark(log, f) == []
-    assert calls == [str(f)]
-
-
-def test_ingest_log_same_size_rewrite_in_racy_window_reoffered(spark, tmp_path, monkeypatch):
-    """A same-size rewrite that keeps the mtime (a coarse-granularity
-    filesystem, or a write within one clock tick) is caught because the
-    logged mtime was not older than the check by the racy margin."""
-    import os
-
-    f = tmp_path / "customers_1.csv"
-    f.write_text("customer_id\n1\n")
-    log = IngestLog(spark, str(tmp_path / "_ingest_log"))
-    assert _check_and_mark(log, f) == [str(f)]
-    mtime = f.stat().st_mtime_ns
-    f.write_text("customer_id\n2\n")
-    os.utime(f, ns=(mtime, mtime))
-    calls = _count_md5(monkeypatch)
-    assert _check_and_mark(log, f) == [str(f)]
-    assert calls == [str(f)]
-
-
-def test_ingest_log_size_change_reoffered(spark, tmp_path, monkeypatch):
-    import os
-
-    f = tmp_path / "customers_1.csv"
-    f.write_text("customer_id\n1\n")
-    mtime = _backdate(f)
-    log = IngestLog(spark, str(tmp_path / "_ingest_log"))
-    _check_and_mark(log, f)
-    f.write_text("customer_id\n1\n2\n")
-    os.utime(f, ns=(mtime, mtime))  # only the size tells
-    calls = _count_md5(monkeypatch)
-    assert _check_and_mark(log, f) == [str(f)]
-    assert calls == [str(f)]
-
-
 def test_ingest_log_reads_spark_written_rows_and_skips_temp_files(spark, tmp_path, monkeypatch):
-    """A log holding a row from the earlier Spark writer (``_SUCCESS``,
-    ``.crc`` files, no ``file_mtime_ns``) and a hidden temp file from an
-    interrupted mark: the logged file is hashed and skipped, the temp
-    file is ignored, and the summary counts exactly the committed rows."""
+    """A log holding a row from the earlier Spark writer (``_SUCCESS``
+    and ``.crc`` files) and a hidden temp file from an interrupted mark:
+    the logged file is hashed and skipped, the temp file is ignored, and
+    the summary counts exactly the committed rows."""
     import os
     from datetime import datetime
 
-    from pyspark.sql import types as T
-
     from python_etl_pipeline_spark.functions.cleansing import file_md5
+    from python_etl_pipeline_spark.sources.ingest_log import LOG_SCHEMA
 
     f, g = tmp_path / "customers_1.csv", tmp_path / "customers_2.csv"
     f.write_text("customer_id\n1\n")
     g.write_text("customer_id\n2\n")
-    _backdate(f)
     log_dir = tmp_path / "_ingest_log"
-    spark_schema = T.StructType([
-        T.StructField("file_name", T.StringType(), False),
-        T.StructField("file_hash", T.StringType(), False),
-        T.StructField("file_size_mb", T.DoubleType(), True),
-        T.StructField("record_count", T.LongType(), True),
-        T.StructField("processed_at", T.TimestampType(), True),
-    ])
     spark.createDataFrame(
         [(f.name, file_md5(f), f.stat().st_size / 2**20, 1, datetime(2024, 1, 1))],
-        spark_schema,
+        LOG_SCHEMA,
     ).repartition(1).write.mode("append").parquet(str(log_dir))
     names = os.listdir(log_dir)
     assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
@@ -221,7 +145,7 @@ def test_ingest_log_reads_spark_written_rows_and_skips_temp_files(spark, tmp_pat
     log = IngestLog(spark, str(log_dir))
     calls = _count_md5(monkeypatch)
     assert _check_and_mark(log, f) == []
-    assert calls == [str(f)]  # no logged mtime: hashed, then skipped
+    assert calls == [str(f)]  # hashed, then skipped
     assert log.summary().first()["n_files"] == 1
     assert _check_and_mark(log, g) == [str(g)]
     summary = log.summary().first()
